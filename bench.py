@@ -153,21 +153,26 @@ HEADLINE = [
 RUNS_PER_QUERY = 3
 
 INGEST_RECORDS = 100_000  # logs.jsonl fixture replicated across 32 landing files
-# the native lane is ~30x faster, so it needs ~10x the rows before per-job
-# fixed overhead stops dominating the rate (BASELINE.md measures it at 1M)
-NATIVE_RECORDS = 1_000_000
 
 
-def _ingest_metrics(spark) -> dict[str, float]:
-    """Ingest throughput (BASELINE.md protocol): reference logs fixture
-    scaled to ~100k records; (a) Python codec decode + parity partitioned
-    write, (b) pure-Catalyst JSONL fast lane decode-only."""
+def _ingest_metrics(spark) -> dict[str, float | str]:
+    """Ingest throughput (BASELINE.md protocol) over the reference logs
+    fixtures; stamps the lanes as fixture-absent on a checkout without
+    them instead of aborting the headline suite. The fixture reads are the
+    lanes' only local opens: Spark I/O errors raise other types."""
+    try:
+        return _ingest_lanes(spark)
+    except FileNotFoundError:
+        return {"ingest_lanes": "fixture-absent"}
+
+
+def _ingest_lanes(spark) -> dict[str, float]:
+    """Reference logs fixture scaled to ~100k records: Python codec decode +
+    parity partitioned write, then the pb lanes (_py_pb_metrics)."""
     import shutil
     import tempfile
 
-    from pyspark.sql import functions as F
-
-    from otlp2parquet_spark.otel import ingest, native_json, writer
+    from otlp2parquet_spark.otel import ingest, writer
 
     src = open("/root/reference/testdata/logs.jsonl").read().strip().splitlines()
     reps = INGEST_RECORDS // len(src) + 1
@@ -193,36 +198,8 @@ def _ingest_metrics(spark) -> dict[str, float]:
             rows = sum(r.rows for r in acct)
             decode_write = max(decode_write, rows / (time.perf_counter() - t0))
 
-        # native lane at NATIVE_RECORDS: replicate the landing files so the
-        # measured window is decode-bound, not job-scheduling-bound
-        native_landing = tempfile.mkdtemp(prefix="bench_native_")
-        reps_native = NATIVE_RECORDS // len(all_lines) + 1
-        chunk = "\n".join(all_lines)
-        for i in range(reps_native):
-            with open(f"{native_landing}/n{i}.jsonl", "w") as f:
-                f.write(chunk)
-        lines = (
-            spark.read.text(native_landing)
-            .filter(F.length(F.trim("value")) > 0)
-            .select(F.col("value").alias("line"))
-        )
-        n = lines.count()
-        decoded = native_json.decode_logs_json_native(lines)
-        # noop write: count() would prune the HOF column-building and
-        # measure only parse+explode (the r1 anchor's flaw)
-        decoded.write.format("noop").mode("overwrite").save()  # warm
-        native_rate = 0.0
-        for _ in range(2):
-            t0 = time.perf_counter()
-            decoded.write.format("noop").mode("overwrite").save()
-            native_rate = max(native_rate, n / (time.perf_counter() - t0))
-        shutil.rmtree(native_landing, ignore_errors=True)
-        metrics = {
-            "ingest_decode_write_rows_per_s": round(decode_write),
-            "ingest_native_decode_rows_per_s": round(native_rate),
-        }
+        metrics = {"ingest_decode_write_rows_per_s": round(decode_write)}
         metrics.update(_py_pb_metrics(spark))
-        metrics.update(_jvm_pb_metrics(spark))
         return metrics
     finally:
         shutil.rmtree(landing, ignore_errors=True)
@@ -276,22 +253,6 @@ def _py_pb_metrics(spark) -> dict[str, float]:
     }
 
 
-def _jvm_pb_metrics(spark) -> dict[str, float]:
-    """JVM from_protobuf lane throughput — auto-activates when the
-    spark-protobuf jar is on the classpath (pip pyspark does not bundle
-    it; see otel/jvm_codec.py). Absent jar -> records the lane as
-    unavailable so round-over-round bench JSON shows WHY the number is
-    missing."""
-    from otlp2parquet_spark.otel import jvm_codec
-
-    if not jvm_codec.jvm_protobuf_available(spark):
-        return {"ingest_jvm_pb_lane": "jar-absent"}
-    rate = _pb_lane_rate(
-        spark, lambda p: jvm_codec.decode_logs_pb(spark, p), payload_reps=200
-    )
-    return {"ingest_jvm_pb_rows_per_s": round(rate)}
-
-
 # Load gate (r8, judge ask #3): headline numbers are only comparable at low
 # ambient load (measured ~70% per-query inflation at load>10; the r7 bench
 # regressions were ambient noise that cost a round of analysis). Rather than
@@ -340,9 +301,12 @@ def _cpu_stat() -> list[int] | None:
     """Aggregate jiffies from /proc/stat (user..steal), None off-Linux."""
     try:
         with open("/proc/stat") as f:
-            return [int(x) for x in f.readline().split()[1:9]]
-    except (OSError, ValueError, IndexError):
+            jiffies = [int(x) for x in f.readline().split()[1:9]]
+    except (OSError, ValueError):
         return None
+    # an older kernel or a container shim may print fewer than the eight
+    # counters _steal_pct indexes (steal is the eighth)
+    return jiffies if len(jiffies) == 8 else None
 
 
 def _steal_pct(before: list[int] | None, after: list[int] | None) -> float | None:

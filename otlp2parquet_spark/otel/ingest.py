@@ -318,25 +318,6 @@ def _handle_decode_error(
     # on_error == "skip": drop silently (caller opted out of accounting)
 
 
-def ingest_jsonl_fast(spark: SparkSession, path: str, signal: str = "logs") -> DataFrame:
-    """Bulk JSONL logs/traces -> otel table via the pure-Catalyst fast path
-    (otel/native_json.py): line-split text scan, from_json decode, automatic
-    fallback of nested-shaped lines to the general codec. ~1.8x the Python
-    codec's throughput on scalar-shaped corpora, zero Python in the hot loop."""
-    from otlp2parquet_spark.otel import native_json
-
-    lines = (
-        spark.read.text(path)
-        .filter(F.length(F.trim("value")) > 0)
-        .select(F.col("value").alias("line"))
-    )
-    if signal == "logs":
-        return native_json.decode_logs_json_auto(lines)
-    if signal == "traces":
-        return native_json.decode_traces_json_auto(lines)
-    raise ValueError(f"fast path supports logs|traces, got {signal!r}")
-
-
 def read_landing_lines(spark: SparkSession, path: str) -> DataFrame:
     """Line-splitting scan for large JSONL landing files (S3, `spark.read.text`).
 
@@ -367,8 +348,8 @@ def _flatten_payload(content: bytes, fmt: str, signal: str) -> list[dict[str, An
     single-pass walker (otel/fast_flatten.py, ~3x the two-step lane); pb
     logs+traces take the fused wire walker (otel/fast_wire.py, ~2.4x).
     Both are differentially verified against the slow pairs
-    (test_fast_flatten.py / test_fast_wire.py); pb metrics keep the
-    wire codec + flatten pair."""
+    (test_fast_flatten.py / test_fast_wire.py); metrics take the same
+    walkers through _flatten_metrics_payload."""
     if content[:2] == b"\x1f\x8b":  # gzip magic (D2)
         content = _gunzip(content)
     if fmt == "pb":

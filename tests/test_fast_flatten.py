@@ -195,7 +195,7 @@ def test_metrics_fused_matches_slow_snake(tree):
 def test_metrics_fused_exotic_and_fixture_parity():
     import copy as _copy
 
-    from test_jvm_metrics_exotic import _gen_tree
+    from test_wire_property import gen_exotic_metrics_tree
 
     # exotic trees rendered to protobuf-JSON (exemplars stripped — the
     # canonical strategy shape only; pb-side exemplars are covered in
@@ -208,7 +208,7 @@ def test_metrics_fused_exotic_and_fixture_parity():
         return o
 
     for seed in range(25):
-        tree = strip(_copy.deepcopy(_gen_tree(seed)))
+        tree = strip(_copy.deepcopy(gen_exotic_metrics_tree(seed)))
         for render in (render_json, render_json_snake):
             doc = json.dumps(render(tree, "ExportMetricsServiceRequest"))
             assert fast_flatten.flatten_metrics_json(
@@ -227,9 +227,85 @@ def test_bad_metrics_rejected_not_crashed():
         '{"resourceMetrics":[{"scopeMetrics":[{"metrics":[{"histogram":{"dataPoints":[{"bucketCounts":7}]}}]}]}]}',
         '{"resourceMetrics":[{"scopeMetrics":[{"metrics":[{"sum":{"isMonotonic":3}}]}]}]}',
         '{"resourceMetrics":[{"scopeMetrics":[{"metrics":[{"gauge":{"dataPoints":[{"asDouble":{}}]}}]}]}]}',
+        # numeric temporality outside {0,1,2} must not be persisted
+        '{"resourceMetrics":[{"scopeMetrics":[{"metrics":[{"sum":{"aggregationTemporality":7}}]}]}]}',
+        '{"resourceMetrics":[{"scopeMetrics":[{"metrics":[{"sum":{"aggregationTemporality":-1}}]}]}]}',
     ]
     for doc in bad:
         with pytest.raises(OtlpDecodeError):
             fast_flatten.flatten_metrics_json(json.loads(doc))
         with pytest.raises(OtlpDecodeError):
             _slow_metrics_json(doc)
+
+
+def test_metrics_skip_counters_nan_infinity_missing():
+    """Missing, literal-NaN, literal-Infinity and overflowing (1e400)
+    values are counted per reason, like summary points, not landed."""
+    gauge = (
+        '{"timeUnixNano": "1000"}, {"timeUnixNano": "2000", "asDouble": 1.5}, '
+        '{"asDouble": NaN}, {"asDouble": -Infinity}, {"asDouble": 1e400}'
+    )
+    summary = (
+        '{"timeUnixNano": "3000", "count": "4", "sum": 10.0, '
+        '"quantileValues": [{"value": 1.0}, {"quantile": 0.5, "value": 2.0}]}'
+    )
+    doc = (
+        '{"resourceMetrics": [{"scopeMetrics": [{"metrics": ['
+        f'{{"name": "g", "gauge": {{"dataPoints": [{gauge}]}}}}, '
+        f'{{"name": "s", "summary": {{"dataPoints": [{summary}]}}}}'
+        "]}]}]}"
+    )
+    fast = fast_flatten.flatten_metrics_json(json.loads(doc))
+    assert fast == _slow_metrics_json(doc)
+    per_type, skipped = fast
+    assert [r["Value"] for r in per_type["gauge"]] == [1.5]
+    assert skipped == {
+        "missing_values": 1,
+        "nan_values": 1,
+        "infinity_values": 2,
+        "summaries": 1,
+    }
+
+
+def test_int_value_beyond_int64_kept_exact():
+    """An intValue past int64 is encoded as the exact integer, not dropped
+    or rounded through a double."""
+    big = 2**63 + 5
+    doc = (
+        '{"resourceLogs": [{"scopeLogs": [{"logRecords": [{"timeUnixNano": "1", '
+        f'"attributes": [{{"key": "big", "value": {{"intValue": "{big}"}}}}]}}]}}]}}]}}'
+    )
+    fast = fast_flatten.flatten_request_json(doc, "logs")
+    assert fast == _slow_logs(doc)
+    assert fast[0]["LogAttributes"] == f'{{"big":{big}}}'
+
+
+def test_traces_enum_names_events_and_links():
+    """Enum NAMES (the strategies render numbers), events and links with
+    base64 ids: the fused walker maps them like the two-step lane."""
+    span = {
+        "traceId": "a71f3d1a6d2d3cadb3669cbd50e165e4",
+        "spanId": "34249d8b829f4116",
+        "name": "op",
+        "kind": "SPAN_KIND_CLIENT",
+        "startTimeUnixNano": "1760738064624180000",
+        "endTimeUnixNano": "1760738064991180000",
+        "status": {"code": "STATUS_CODE_ERROR", "message": "boom"},
+        "events": [
+            {
+                "timeUnixNano": "1760738064700000000",
+                "name": "retry",
+                "attributes": [{"key": "n", "value": {"intValue": "2"}}],
+            }
+        ],
+        "links": [{"traceId": "px89Gm0tPK2zZpy9UOFl5A==", "spanId": "NCSdi4KfQRY="}],
+    }
+    doc = json.dumps({"resourceSpans": [{"scopeSpans": [{"spans": [span]}]}]})
+    fast = fast_flatten.flatten_request_json(doc, "traces")
+    assert fast == _slow_traces(doc)
+    row = fast[0]
+    assert row["SpanKind"] == "SPAN_KIND_CLIENT"
+    assert row["StatusCode"] == "STATUS_CODE_ERROR"
+    assert row["Duration"] == 367000000
+    assert row["EventsAttributes"] == ['{"n":2}']
+    assert row["LinksTraceId"] == ["a71f3d1a6d2d3cadb3669cbd50e165e4"]

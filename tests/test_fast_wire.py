@@ -195,17 +195,94 @@ def test_metrics_fixture_and_exotic_parity():
     import copy
     import glob
 
-    from test_jvm_metrics_exotic import _encode_request, _gen_tree
+    from test_wire_property import encode_metrics_request, gen_exotic_metrics_tree
 
     for fx in sorted(glob.glob("/root/reference/testdata/metrics_*.pb")):
         pb = open(fx, "rb").read()
         assert fast_wire.flatten_metrics_pb(pb) == _slow_metrics(pb), fx
         assert fast_wire.flatten_metrics_pb(pb * 3) == _slow_metrics(pb * 3), fx
     # exotic seeds: exp-histogram geometry, exemplars, min/max presence,
-    # multi-member nesting — the same generator the JVM adapter sweep uses
+    # multi-member nesting
     for seed in range(40):
-        pb = _encode_request(copy.deepcopy(_gen_tree(seed)))
+        pb = encode_metrics_request(copy.deepcopy(gen_exotic_metrics_tree(seed)))
         assert fast_wire.flatten_metrics_pb(pb) == _slow_metrics(pb), seed
+
+
+def test_histogram_min_max_presence_and_19_digit_counts():
+    """Histogram and exponential-histogram min/max keep proto3 presence in
+    both formats: absent reads as None, an explicitly sent 0.0 as 0.0.
+    19-digit uint64 counts (still inside int64) come through exact."""
+    import json
+
+    from otlp2parquet_spark.otel import fast_flatten, otlp_json
+
+    from test_wire_property import render_json
+
+    big = 1234567890123456789
+
+    def hist_dp(**minmax):
+        return {
+            "time_unix_nano": 1_700_000_000_000_000_000,
+            "count": big,
+            "bucket_counts": [big, 3],
+            "explicit_bounds": [5.0],
+            **minmax,
+        }
+
+    def exp_dp(**minmax):
+        return {
+            "time_unix_nano": 1_700_000_000_000_000_000,
+            "count": 2,
+            "scale": 1,
+            "zero_count": big,
+            "positive": {"offset": 0, "bucket_counts": [2]},
+            **minmax,
+        }
+
+    tree = {
+        "resource_metrics": [
+            {
+                "scope_metrics": [
+                    {
+                        "metrics": [
+                            {
+                                "name": "h",
+                                "histogram": {
+                                    "aggregation_temporality": 2,
+                                    "data_points": [
+                                        hist_dp(),
+                                        hist_dp(min=0.0, max=0.0),
+                                        hist_dp(min=1.5, max=9.5),
+                                    ],
+                                },
+                            },
+                            {
+                                "name": "eh",
+                                "exponential_histogram": {
+                                    "aggregation_temporality": 2,
+                                    "data_points": [exp_dp(), exp_dp(min=0.0, max=0.0)],
+                                },
+                            },
+                        ]
+                    }
+                ]
+            }
+        ]
+    }
+    pb = encode_message(tree, "ExportMetricsServiceRequest")
+    doc = json.dumps(render_json(tree, "ExportMetricsServiceRequest"))
+    fast_pb = fast_wire.flatten_metrics_pb(pb)
+    fast_json = fast_flatten.flatten_metrics_json(json.loads(doc))
+    assert fast_pb == _slow_metrics(pb)
+    assert fast_json == flatten.flatten_metrics(otlp_json.parse_request_json(doc, "metrics"))
+    assert fast_json == fast_pb
+    per_type, _ = fast_pb
+    hist, exp = per_type["histogram"], per_type["exponential_histogram"]
+    assert [(r["Min"], r["Max"]) for r in hist] == [(None, None), (0.0, 0.0), (1.5, 9.5)]
+    assert [(r["Min"], r["Max"]) for r in exp] == [(None, None), (0.0, 0.0)]
+    assert {r["Count"] for r in hist} == {big}
+    assert all(r["BucketCounts"] == [big, 3] for r in hist)
+    assert {r["ZeroCount"] for r in exp} == {big}
 
 
 def test_metrics_data_member_priority():
