@@ -1,11 +1,23 @@
 """CLI entry point (reference src/main.rs:33-130 twin, Spark-flavored).
 
 Subcommands:
-- ``ingest``  — batch ingest a landing dir for one signal into the
-  partitioned layout (the reference's serve+POST dataflow, batch-mode);
-- ``stream``  — continuous Structured-Streaming ingest with checkpointing;
-- ``connect`` — emit client config templates (D29);
-- ``validate-config`` — load + validate the layered config and print it.
+- OTLP ingest: ``ingest`` (batch-ingest a landing dir for one signal into
+  the partitioned layout — the reference's serve+POST dataflow, batch-mode),
+  ``stream`` (continuous Structured-Streaming ingest with checkpointing),
+  ``serve`` (the out-of-engine HTTP receiver, D1), ``compact`` (merge small
+  flush files per partition), ``connect`` (emit client config templates,
+  D29), ``validate-config`` (load + validate the layered config and print
+  it);
+- epoch-verdict document lanes, one runner driven by the ``LANES`` table:
+  ``neardup`` (T11), ``xdedup`` (T15), ``badmit`` (T22), ``dsirselect``
+  (T14), ``qscore`` (T13), ``dcscore`` (T20), ``lmscore`` (T18), ``funnel``
+  (T21);
+- the artifacts those lanes score against: ``dsirtrain``, ``qtrain``,
+  ``dctrain``, ``lmtrain``;
+- other streaming lanes: ``hh`` (heavy hitters, T17), ``annindex`` (IVFPQ
+  codes, T12), and the sealed-window event lanes ``wp95`` (T16) and
+  ``whll`` (T19), which share one runner;
+- ``zorder`` — re-cluster a parquet table by a two-column Morton z-value.
 
 Global flags mirror the reference: ``--config FILE``, ``--output DIR``,
 ``--log-level LEVEL`` (reference --port applies to the out-of-engine HTTP
@@ -17,6 +29,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from dataclasses import dataclass
 
 
 def _positive_int(s: str) -> int:
@@ -24,6 +37,231 @@ def _positive_int(s: str) -> int:
     if v < 1:
         raise argparse.ArgumentTypeError(f"must be >= 1, got {v}")
     return v
+
+
+@dataclass(frozen=True)
+class _Lane:
+    """One epoch-verdict lane: drain a documents landing dir through a
+    streaming.pipeline function, optionally compact, then print a JSON
+    summary of its first-epoch verdict table.
+
+    opts are the options between landing_dir and --checkpoint, as (flag,
+    help[, add_argument overrides]), required by default and in the order
+    the stream function takes them. `root` names the state-dir option
+    (echoed last); `table` is the verdict subdir under it, read with
+    `schema`. aggs are (JSON key, SQL aggregate, int | float); `echo` names
+    options printed after them. Each compactor (JSON key, pipeline
+    function, subdir) runs as fn(spark, dir); a multi-table one returns a
+    count per `group` name, printed as a dict under its key."""
+
+    help: str
+    stream: str
+    opts: tuple
+    root: str
+    schema: str
+    aggs: tuple[tuple[str, str, type], ...]
+    compactors: tuple[tuple[str, str, str], ...]
+    table: str = ""
+    compact: tuple[str, str] = (
+        "--compact",
+        "merge committed verdict epochs after the drain",
+    )
+    echo: tuple[str, ...] = ()
+    group: tuple[str, ...] = ()
+
+
+def _sum(col: str) -> str:
+    return f"sum(cast({col} AS bigint))"
+
+
+_OUT = ("--out", "verdicts root")
+
+LANES: dict[str, _Lane] = {
+    "neardup": _Lane(
+        help="streaming near-dup dedup over a documents landing dir (T11): "
+        "drain available files, flag each doc against the persistent LSH "
+        "band index, append per-epoch verdicts under STATE/flags",
+        stream="neardup_stream",
+        opts=(("--state", "band index + flags root"),),
+        root="state",
+        table="flags",
+        schema="doc_id long, is_neardup boolean, epoch int",
+        aggs=(
+            ("docs_flagged_total", "count(*)", int),
+            ("near_dups", _sum("is_neardup"), int),
+        ),
+        compact=(
+            "--compact-index",
+            "merge committed band-index AND flags epochs after the drain "
+            "(replay-safe: only epochs below the newest)",
+        ),
+        # two SEPARATE keys: summing them under the older one would change
+        # its meaning round over round (round-8 review)
+        compactors=(
+            ("index_epochs_compacted", "compact_band_index", ""),
+            ("flags_epochs_compacted", "compact_verdicts", "flags"),
+        ),
+    ),
+    "xdedup": _Lane(
+        help="streaming EXACT dedup over a documents landing dir (T15): "
+        "drain available files, flag each doc against the persistent "
+        "content-hash index, append per-epoch verdicts under STATE/flags",
+        stream="exactdedup_stream",
+        opts=(("--state", "hash index + flags root"),),
+        root="state",
+        table="flags",
+        schema="doc_id long, content_hash string, is_duplicate boolean, "
+        "dup_of long, epoch int",
+        aggs=(
+            ("docs_flagged_total", "count(*)", int),
+            ("exact_dups", _sum("is_duplicate"), int),
+        ),
+        compact=(
+            "--compact-index",
+            "merge committed hash-index AND flags epochs after the drain",
+        ),
+        compactors=(
+            ("index_epochs_compacted", "compact_hash_index", ""),
+            ("flags_epochs_compacted", "compact_verdicts", "flags"),
+        ),
+    ),
+    "dsirselect": _Lane(
+        help="streaming DSIR selection (T14): drain available files, score "
+        "each doc map-only against the frozen selection model, append "
+        "per-epoch keep/drop verdicts under OUT",
+        stream="dsir_select_stream",
+        opts=(("--model", "dsirtrain artifact"), _OUT),
+        root="out",
+        schema="doc_id long, liw_micro long, n_tok long, keep boolean, epoch int",
+        aggs=(("docs_scored", "count(*)", int), ("selected", _sum("keep"), int)),
+        compactors=(("verdict_epochs_compacted", "compact_verdicts", ""),),
+    ),
+    "badmit": _Lane(
+        help="streaming token-budget admission (T22): drain available "
+        "files, admit docs in arrival order while the global token count "
+        "fits --budget, append per-epoch verdicts under STATE/verdicts. "
+        "Input must be doc-unique (run xdedup upstream): budget is "
+        "charged per arrival",
+        stream="budget_admit_stream",
+        opts=(
+            ("--state", "verdicts + totals root"),
+            ("--budget", "token budget", {"type": _positive_int}),
+        ),
+        root="state",
+        table="verdicts",
+        schema="doc_id long, n_tok long, admitted boolean, epoch int",
+        aggs=(
+            ("docs_seen", "count(*)", int),
+            ("docs_admitted", _sum("admitted"), int),
+            ("tokens_admitted", "sum(CASE WHEN admitted THEN n_tok ELSE 0 END)", int),
+        ),
+        echo=("budget",),
+        compactors=(("verdict_epochs_compacted", "compact_verdicts", "verdicts"),),
+    ),
+    "qscore": _Lane(
+        help="streaming quality scoring (T13): drain available files, score "
+        "each doc map-only against the frozen persisted classifier, append "
+        "per-epoch verdicts under OUT",
+        stream="quality_score_stream",
+        opts=(("--model", "qtrain weight artifact"), _OUT),
+        root="out",
+        schema="doc_id long, y int, z long, pred int, epoch int",
+        aggs=(("docs_scored", "count(*)", int), ("predicted_quality", _sum("pred"), int)),
+        compactors=(("score_epochs_compacted", "compact_verdicts", ""),),
+    ),
+    "dcscore": _Lane(
+        help="streaming benchmark decontamination (T20): drain available "
+        "files, flag each doc's trigram overlap against the frozen "
+        "benchset, append per-epoch verdicts under OUT",
+        stream="decontam_stream",
+        opts=(("--benchset", "dctrain artifact"), _OUT),
+        root="out",
+        schema="doc_id long, n_grams long, n_hits long, "
+        "contamination double, contaminated boolean, epoch int",
+        aggs=(("docs_scored", "count(*)", int), ("contaminated", _sum("contaminated"), int)),
+        compactors=(("verdict_epochs_compacted", "compact_verdicts", ""),),
+    ),
+    "lmscore": _Lane(
+        help="streaming frozen-LM perplexity scoring (T18): drain available "
+        "files, score each doc against the persisted LM counts, append "
+        "per-epoch verdicts under OUT",
+        stream="lmscore_stream",
+        opts=(("--model", "lmtrain artifact"), _OUT),
+        root="out",
+        schema="doc_id long, source string, n_bigrams long, lm_score double, epoch int",
+        aggs=(
+            ("docs_scored", "count(*)", int),
+            ("mean_lm_score", "round(avg(lm_score), 4)", float),
+        ),
+        compactors=(("score_epochs_compacted", "compact_verdicts", ""),),
+    ),
+    "funnel": _Lane(
+        help="composed streaming ingest funnel (T21): drain available files "
+        "through exact dedup -> LSH near-dup -> frozen quality classifier -> "
+        "frozen decontamination, maintaining the persistent hash/band "
+        "indexes and a per-epoch (k1..k4) verdict ledger under STATE",
+        stream="ingest_funnel_stream",
+        opts=(
+            ("--state", "funnel state root"),
+            (
+                "--qc-model",
+                "qtrain weight artifact; omit to run the quality stage "
+                "keep-all (the 3-stage skeleton funnel, r12)",
+                {"required": False},
+            ),
+            ("--benchset", "dctrain gram artifact"),
+        ),
+        root="state",
+        table="verdicts",
+        schema="doc_id long, source string, k1 boolean, k2 boolean, "
+        "k3 boolean, k4 boolean, epoch int",
+        aggs=(
+            ("docs_ingested", "count(*)", int),
+            ("kept_exact", _sum("k1"), int),
+            ("kept_neardup", _sum("k2"), int),
+            ("kept_quality", _sum("k3"), int),
+            ("kept_clean", _sum("k4"), int),
+        ),
+        compact=("--compact", "compact all three state tables after the drain"),
+        compactors=(("compacted", "compact_ingest_funnel", ""),),
+        group=("hash_epochs", "band_epochs", "verdict_epochs"),
+    ),
+}
+
+# the watermark-sealed event-window lanes: (help, --out help, bucketing
+# function, read-side walk, JSON key of the walked row count)
+_WINDOW_LANES = {
+    "wp95": (
+        "streaming windowed exp-histogram p95 over an events landing "
+        "dir (T16): drain available files, append watermark-sealed "
+        "per-(5-min window, event_type) bucket counts under OUT, print "
+        "the percentile walk over everything sealed so far",
+        "sealed bucket-count table root",
+        "exp_hist_buckets",
+        "exp_p95_from_buckets",
+        "sealed_rows",
+    ),
+    "whll": (
+        "streaming windowed distinct-user estimates over an events "
+        "landing dir (T19): drain available files, append watermark-sealed "
+        "per-(5-min window, event_type) deterministic-HLL registers under "
+        "OUT, print the estimates over everything sealed so far",
+        "sealed register table root",
+        "hll_reg_buckets",
+        "hll_estimate_from_registers",
+        "sealed_estimates",
+    ),
+}
+
+
+def _add_lane_parser(sub, name: str) -> None:
+    lane = LANES[name]
+    p = sub.add_parser(name, help=lane.help)
+    p.add_argument("landing_dir", help="dir of documents-schema parquet files")
+    for flag, help_, *over in lane.opts:
+        p.add_argument(flag, **{"required": True, "help": help_, **(over[0] if over else {})})
+    p.add_argument("--checkpoint", required=True)
+    p.add_argument(lane.compact[0], dest="compact", action="store_true", help=lane.compact[1])
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -78,36 +316,8 @@ def _build_parser() -> argparse.ArgumentParser:
         help="compact even if a writer looks active on the root",
     )
 
-    nd = sub.add_parser(
-        "neardup",
-        help="streaming near-dup dedup over a documents landing dir (T11): "
-        "drain available files, flag each doc against the persistent LSH "
-        "band index, append per-epoch verdicts under STATE/flags",
-    )
-    nd.add_argument("landing_dir", help="dir of documents-schema parquet files")
-    nd.add_argument("--state", required=True, help="band index + flags root")
-    nd.add_argument("--checkpoint", required=True)
-    nd.add_argument(
-        "--compact-index",
-        action="store_true",
-        help="merge committed band-index AND flags epochs after the drain "
-        "(replay-safe: only epochs below the newest)",
-    )
-
-    xd = sub.add_parser(
-        "xdedup",
-        help="streaming EXACT dedup over a documents landing dir (T15): "
-        "drain available files, flag each doc against the persistent "
-        "content-hash index, append per-epoch verdicts under STATE/flags",
-    )
-    xd.add_argument("landing_dir", help="dir of documents-schema parquet files")
-    xd.add_argument("--state", required=True, help="hash index + flags root")
-    xd.add_argument("--checkpoint", required=True)
-    xd.add_argument(
-        "--compact-index",
-        action="store_true",
-        help="merge committed hash-index AND flags epochs after the drain",
-    )
+    for name in ("neardup", "xdedup"):
+        _add_lane_parser(sub, name)
 
     hhp = sub.add_parser(
         "hh",
@@ -151,39 +361,8 @@ def _build_parser() -> argparse.ArgumentParser:
     dt.add_argument("corpus_dir", help="documents-schema parquet table")
     dt.add_argument("--model", required=True, help="model artifact destination")
 
-    ds = sub.add_parser(
-        "dsirselect",
-        help="streaming DSIR selection (T14): drain available files, score "
-        "each doc map-only against the frozen selection model, append "
-        "per-epoch keep/drop verdicts under OUT",
-    )
-    ds.add_argument("landing_dir", help="dir of documents-schema parquet files")
-    ds.add_argument("--model", required=True, help="dsirtrain artifact")
-    ds.add_argument("--out", required=True, help="verdicts root")
-    ds.add_argument("--checkpoint", required=True)
-    ds.add_argument(
-        "--compact",
-        action="store_true",
-        help="merge committed verdict epochs after the drain",
-    )
-
-    ba = sub.add_parser(
-        "badmit",
-        help="streaming token-budget admission (T22): drain available "
-        "files, admit docs in arrival order while the global token count "
-        "fits --budget, append per-epoch verdicts under STATE/verdicts. "
-        "Input must be doc-unique (run xdedup upstream): budget is "
-        "charged per arrival",
-    )
-    ba.add_argument("landing_dir", help="dir of documents-schema parquet files")
-    ba.add_argument("--state", required=True, help="verdicts + totals root")
-    ba.add_argument("--budget", required=True, type=_positive_int, help="token budget")
-    ba.add_argument("--checkpoint", required=True)
-    ba.add_argument(
-        "--compact",
-        action="store_true",
-        help="merge committed verdict epochs after the drain",
-    )
+    for name in ("dsirselect", "badmit"):
+        _add_lane_parser(sub, name)
 
     qt = sub.add_parser(
         "qtrain",
@@ -196,21 +375,7 @@ def _build_parser() -> argparse.ArgumentParser:
         "--rounds", type=_positive_int, default=None, help="IPM rounds (>= 1)"
     )
 
-    qsc = sub.add_parser(
-        "qscore",
-        help="streaming quality scoring (T13): drain available files, score "
-        "each doc map-only against the frozen persisted classifier, append "
-        "per-epoch verdicts under OUT",
-    )
-    qsc.add_argument("landing_dir", help="dir of documents-schema parquet files")
-    qsc.add_argument("--model", required=True, help="qtrain weight artifact")
-    qsc.add_argument("--out", required=True, help="verdicts root")
-    qsc.add_argument("--checkpoint", required=True)
-    qsc.add_argument(
-        "--compact",
-        action="store_true",
-        help="merge committed verdict epochs after the drain",
-    )
+    _add_lane_parser(sub, "qscore")
 
     dct = sub.add_parser(
         "dctrain",
@@ -220,21 +385,7 @@ def _build_parser() -> argparse.ArgumentParser:
     dct.add_argument("bench_dir", help="benchmark documents parquet table")
     dct.add_argument("--benchset", required=True, help="gram-set destination")
 
-    dcs = sub.add_parser(
-        "dcscore",
-        help="streaming benchmark decontamination (T20): drain available "
-        "files, flag each doc's trigram overlap against the frozen "
-        "benchset, append per-epoch verdicts under OUT",
-    )
-    dcs.add_argument("landing_dir", help="dir of documents-schema parquet files")
-    dcs.add_argument("--benchset", required=True, help="dctrain artifact")
-    dcs.add_argument("--out", required=True, help="verdicts root")
-    dcs.add_argument("--checkpoint", required=True)
-    dcs.add_argument(
-        "--compact",
-        action="store_true",
-        help="merge committed verdict epochs after the drain",
-    )
+    _add_lane_parser(sub, "dcscore")
 
     lt = sub.add_parser(
         "lmtrain",
@@ -244,44 +395,8 @@ def _build_parser() -> argparse.ArgumentParser:
     lt.add_argument("corpus_dir", help="documents-schema parquet table")
     lt.add_argument("--model", required=True, help="artifact destination")
 
-    ls = sub.add_parser(
-        "lmscore",
-        help="streaming frozen-LM perplexity scoring (T18): drain available "
-        "files, score each doc against the persisted LM counts, append "
-        "per-epoch verdicts under OUT",
-    )
-    ls.add_argument("landing_dir", help="dir of documents-schema parquet files")
-    ls.add_argument("--model", required=True, help="lmtrain artifact")
-    ls.add_argument("--out", required=True, help="verdicts root")
-    ls.add_argument("--checkpoint", required=True)
-    ls.add_argument(
-        "--compact",
-        action="store_true",
-        help="merge committed verdict epochs after the drain",
-    )
-
-    fn = sub.add_parser(
-        "funnel",
-        help="composed streaming ingest funnel (T21): drain available files "
-        "through exact dedup -> LSH near-dup -> frozen quality classifier -> "
-        "frozen decontamination, maintaining the persistent hash/band "
-        "indexes and a per-epoch (k1..k4) verdict ledger under STATE",
-    )
-    fn.add_argument("landing_dir", help="dir of documents-schema parquet files")
-    fn.add_argument("--state", required=True, help="funnel state root")
-    fn.add_argument(
-        "--qc-model",
-        default=None,
-        help="qtrain weight artifact; omit to run the quality stage "
-        "keep-all (the 3-stage skeleton funnel, r12)",
-    )
-    fn.add_argument("--benchset", required=True, help="dctrain gram artifact")
-    fn.add_argument("--checkpoint", required=True)
-    fn.add_argument(
-        "--compact",
-        action="store_true",
-        help="compact all three state tables after the drain",
-    )
+    for name in ("lmscore", "funnel"):
+        _add_lane_parser(sub, name)
 
     zo = sub.add_parser(
         "zorder",
@@ -300,27 +415,11 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     zo.add_argument("--files", type=int, default=32, help="output file count")
 
-    wp = sub.add_parser(
-        "wp95",
-        help="streaming windowed exp-histogram p95 over an events landing "
-        "dir (T16): drain available files, append watermark-sealed "
-        "per-(5-min window, event_type) bucket counts under OUT, print "
-        "the percentile walk over everything sealed so far",
-    )
-    wp.add_argument("landing_dir", help="dir of events-schema parquet files")
-    wp.add_argument("--out", required=True, help="sealed bucket-count table root")
-    wp.add_argument("--checkpoint", required=True)
-
-    wh = sub.add_parser(
-        "whll",
-        help="streaming windowed distinct-user estimates over an events "
-        "landing dir (T19): drain available files, append watermark-sealed "
-        "per-(5-min window, event_type) deterministic-HLL registers under "
-        "OUT, print the estimates over everything sealed so far",
-    )
-    wh.add_argument("landing_dir", help="dir of events-schema parquet files")
-    wh.add_argument("--out", required=True, help="sealed register table root")
-    wh.add_argument("--checkpoint", required=True)
+    for name, (help_, out_help, *_) in _WINDOW_LANES.items():
+        wl = sub.add_parser(name, help=help_)
+        wl.add_argument("landing_dir", help="dir of events-schema parquet files")
+        wl.add_argument("--out", required=True, help=out_help)
+        wl.add_argument("--checkpoint", required=True)
 
     sub.add_parser("validate-config", help="load, validate and print config")
     return p
@@ -330,8 +429,8 @@ def _file_sink_has_commits(out_dir: str) -> bool:
     """Whether a streaming file sink has COMMITTED anything: gate on the
     sink's _spark_metadata log, never a *.parquet tree walk — an aborted
     batch can leave uncommitted part files a walk would count as data while
-    the metadata-aware read (correctly) ignores them. Shared by the wp95
-    (T16) and whll (T19) lanes."""
+    the metadata-aware read (correctly) ignores them. Used by the
+    sealed-window runner (wp95, whll)."""
     import os
 
     meta_dir = os.path.join(out_dir, "_spark_metadata")
@@ -381,6 +480,92 @@ def _load_cfg(args):
     return load_config(args.config, overrides)
 
 
+def _emit(**fields) -> int:
+    """Print a command's result as one JSON line; exit code 0."""
+    print(json.dumps(fields))
+    return 0
+
+
+def _run_lane(spark, args) -> int:
+    """Drain, optionally compact, and summarize one LANES entry."""
+    import os
+
+    from otlp2parquet_spark.streaming import pipeline as stream_pipeline
+
+    lane = LANES[args.command]
+    root = getattr(args, lane.root)
+
+    def at(subdir: str) -> str:
+        return os.path.join(root, subdir) if subdir else root
+
+    inputs = [getattr(args, flag[2:].replace("-", "_")) for flag, *_ in lane.opts]
+    drain = getattr(stream_pipeline, lane.stream)
+    drain(spark, args.landing_dir, *inputs, args.checkpoint).awaitTermination()
+    # every compactor returns 0 when no epoch ever flushed (empty landing dir)
+    compacted = {}
+    for key, fn, subdir in lane.compactors:
+        n = getattr(stream_pipeline, fn)(spark, at(subdir)) if args.compact else 0
+        if lane.group:  # a multi-table compactor: one count per group name
+            n = dict(zip(lane.group, n or (0,) * len(lane.group)))
+        compacted[key] = n
+    # first_epoch_rows: crash-window copies AND re-delivered docs (whose
+    # second verdict differs) resolve to the first epoch's row
+    table = _epoch_table(spark, at(lane.table), lane.schema)
+    if table is None:  # empty landing dir: no epoch flushed
+        row = [None] * len(lane.aggs)
+    else:
+        row = table.selectExpr(*(sql for _, sql, _ in lane.aggs)).first()
+    # a count or sum over nothing prints 0; a mean over nothing prints null
+    out = {
+        key: None if v is None and kind is float else kind(v or 0)
+        for (key, _, kind), v in zip(lane.aggs, row)
+    }
+    out.update((k, getattr(args, k)) for k in lane.echo)
+    out.update(compacted)
+    out[lane.root] = root
+    return _emit(**out)
+
+
+def _run_window_lane(args) -> int:
+    """Drain an events landing dir into a watermark-sealed parquet sink,
+    then summarize everything sealed so far (the wp95 and whll lanes)."""
+    from otlp2parquet_spark.session import get_spark
+    from otlp2parquet_spark.streaming import pipeline as stream_pipeline
+
+    _, _, buckets, walk, rows_key = _WINDOW_LANES[args.command]
+    spark = get_spark(app_name=f"otlp2parquet-{args.command}")
+    stream = stream_pipeline.events_stream(spark, args.landing_dir)
+    (
+        getattr(stream_pipeline, buckets)(stream)
+        .writeStream.format("parquet")
+        .option("path", args.out)
+        .option("checkpointLocation", args.checkpoint)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    rows = windows = 0
+    # empty landing dir / nothing sealed: the file sink may never have
+    # written a footer — summarize zero instead of raising on the read
+    if _file_sink_has_commits(args.out):
+        from pyspark.errors import AnalysisException
+        from pyspark.sql import functions as F
+
+        try:
+            walked = getattr(stream_pipeline, walk)(spark.read.parquet(args.out))
+            # one job for both summary integers — the walk is the
+            # expensive part of the lane
+            rows, windows = walked.agg(
+                F.count("*"), F.countDistinct("window_start")
+            ).first()
+        except AnalysisException:
+            # a commit log whose every batch sealed zero windows lists
+            # no files -> nothing to infer a schema from
+            rows = windows = 0
+    return _emit(**{rows_key: rows}, windows_sealed=windows, out=args.out)
+
+
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
 
@@ -395,95 +580,8 @@ def main(argv: list[str] | None = None) -> int:
             return 2
         return 0
 
-    if args.command == "wp95":
-        import os
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-wp95")
-        stream = stream_pipeline.events_stream(spark, args.landing_dir)
-        q = (
-            stream_pipeline.exp_hist_buckets(stream)
-            .writeStream.format("parquet")
-            .option("path", args.out)
-            .option("checkpointLocation", args.checkpoint)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # empty landing dir / nothing sealed: the file sink may never have
-        # written a footer — summarize zero instead of raising on the read
-        has_rows = _file_sink_has_commits(args.out)
-        rows = windows = 0
-        if has_rows:
-            from pyspark.sql import functions as F
-            from pyspark.errors import AnalysisException
-
-            try:
-                walked = stream_pipeline.exp_p95_from_buckets(
-                    spark.read.parquet(args.out)
-                )
-                # one job for both summary integers — the walk (two window
-                # functions + a groupBy) is the expensive part of the lane
-                rows, windows = walked.agg(
-                    F.count("*"), F.countDistinct("window_start")
-                ).first()
-            except AnalysisException:
-                # a commit log whose every batch sealed zero windows lists
-                # no files -> nothing to infer a schema from
-                rows = windows = 0
-        print(
-            json.dumps(
-                {"sealed_rows": rows, "windows_sealed": windows, "out": args.out}
-            )
-        )
-        return 0
-
-    if args.command == "whll":
-        import os
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-whll")
-        stream = stream_pipeline.events_stream(spark, args.landing_dir)
-        q = (
-            stream_pipeline.hll_reg_buckets(stream)
-            .writeStream.format("parquet")
-            .option("path", args.out)
-            .option("checkpointLocation", args.checkpoint)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        has_rows = _file_sink_has_commits(args.out)
-        rows = windows = 0
-        if has_rows:
-            from pyspark.sql import functions as F
-            from pyspark.errors import AnalysisException
-
-            try:
-                est = stream_pipeline.hll_estimate_from_registers(
-                    spark.read.parquet(args.out)
-                )
-                rows, windows = est.agg(
-                    F.count("*"), F.countDistinct("window_start")
-                ).first()
-            except AnalysisException:
-                rows = windows = 0
-        print(
-            json.dumps(
-                {
-                    "sealed_estimates": rows,
-                    "windows_sealed": windows,
-                    "out": args.out,
-                }
-            )
-        )
-        return 0
+    if args.command in _WINDOW_LANES:
+        return _run_window_lane(args)
 
     try:
         cfg = _load_cfg(args)
@@ -495,9 +593,38 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(cfg.__dict__, indent=2, default=str))
         return 0
 
+    if args.command == "serve":
+        from otlp2parquet_spark.otel import receiver
+
+        srv = receiver.make_server(
+            args.landing_root,
+            args.host,
+            cfg.server["port"],
+            max_payload_bytes=cfg.request["max_payload_bytes"],
+            quiet=False,
+        )
+        print(
+            f"listening on {args.host}:{srv.server_address[1]}, "
+            f"landing -> {args.landing_root}"
+        )
+        try:
+            srv.serve_forever()
+        except KeyboardInterrupt:
+            pass
+        finally:
+            srv.server_close()
+        return 0
+
+    if args.command is None:
+        _build_parser().print_help()
+        return 0
+
+    from otlp2parquet_spark.session import get_spark
+
+    spark = get_spark(app_name=f"otlp2parquet-{args.command}")
+
     if args.command == "compact":
         from otlp2parquet_spark.otel import compact as compact_mod
-        from otlp2parquet_spark.session import get_spark
 
         # Non-atomic swap (see compact.py docstring): new files land before
         # fragment deletion, so a racing reader can see duplicated rows for
@@ -510,7 +637,6 @@ def main(argv: list[str] | None = None) -> int:
             "readers may see duplicated rows until the swap completes)",
             file=sys.stderr,
         )
-        spark = get_spark(app_name="otlp2parquet-compact")
         try:
             acct_df = compact_mod.compact_table(
                 spark,
@@ -531,117 +657,19 @@ def main(argv: list[str] | None = None) -> int:
             print(f"error: {e}", file=sys.stderr)
             return 2
         acct = acct_df.collect()
-        print(
-            json.dumps(
-                {
-                    "compacted_files": len(acct),
-                    "rows": int(sum(r.rows for r in acct)),
-                    "output": cfg.output_root(),
-                }
-            )
+        return _emit(
+            compacted_files=len(acct), rows=int(sum(r.rows for r in acct)),
+            output=cfg.output_root(),
         )
-        return 0
 
-    if args.command == "neardup":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-neardup")
-        q = stream_pipeline.neardup_stream(
-            spark, args.landing_dir, args.state, args.checkpoint
-        )
-        q.awaitTermination()
-        compacted = flags_compacted = 0
-        if args.compact_index:
-            # both return 0 when no epoch ever flushed (empty landing dir);
-            # reported as SEPARATE fields — summing them under the
-            # pre-existing key would silently change its meaning for
-            # round-over-round comparisons (round-8 review)
-            compacted = stream_pipeline.compact_band_index(spark, args.state)
-            flags_compacted = stream_pipeline.compact_flags(spark, args.state)
-        flags_dir = os.path.join(args.state, "flags")
-        # first_epoch_rows: crash-window copies AND re-delivered docs
-        # (second verdict differs) resolve to the first epoch's row
-        flags = _epoch_table(
-            spark, flags_dir, "doc_id long, is_neardup boolean, epoch int"
-        )
-        if flags is not None:
-            n_total, n_dup = flags.agg(
-                F.count("*"), F.sum(F.col("is_neardup").cast("long"))
-            ).first()
-        else:
-            # empty landing dir: no epoch flushed, nothing to summarize
-            n_total, n_dup = 0, 0
-        print(
-            json.dumps(
-                {
-                    "docs_flagged_total": int(n_total),
-                    "near_dups": int(n_dup or 0),
-                    "index_epochs_compacted": compacted,
-                    "flags_epochs_compacted": flags_compacted,
-                    "state": args.state,
-                }
-            )
-        )
-        return 0
-
-    if args.command == "xdedup":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-xdedup")
-        q = stream_pipeline.exactdedup_stream(
-            spark, args.landing_dir, args.state, args.checkpoint
-        )
-        q.awaitTermination()
-        compacted = flags_compacted = 0
-        if args.compact_index:
-            compacted = stream_pipeline.compact_hash_index(spark, args.state)
-            flags_compacted = stream_pipeline.compact_dedup_flags(
-                spark, args.state
-            )
-        flags_dir = os.path.join(args.state, "flags")
-        flags = _epoch_table(
-            spark,
-            flags_dir,
-            "doc_id long, content_hash string, is_duplicate boolean, "
-            "dup_of long, epoch int",
-        )
-        if flags is not None:
-            n_total, n_dup = flags.agg(
-                F.count("*"), F.sum(F.col("is_duplicate").cast("long"))
-            ).first()
-        else:
-            # empty landing dir: no epoch flushed, nothing to summarize
-            n_total, n_dup = 0, 0
-        print(
-            json.dumps(
-                {
-                    "docs_flagged_total": int(n_total),
-                    "exact_dups": int(n_dup or 0),
-                    "index_epochs_compacted": compacted,
-                    "flags_epochs_compacted": flags_compacted,
-                    "state": args.state,
-                }
-            )
-        )
-        return 0
+    if args.command in LANES:
+        return _run_lane(spark, args)
 
     if args.command == "hh":
         import os
 
-        from otlp2parquet_spark.session import get_spark
         from otlp2parquet_spark.streaming import pipeline as stream_pipeline
 
-        spark = get_spark(app_name="otlp2parquet-hh")
         q = stream_pipeline.heavyhitters_stream(
             spark, args.landing_dir, args.state, args.checkpoint
         )
@@ -663,26 +691,16 @@ def main(argv: list[str] | None = None) -> int:
         else:
             # empty landing dir: no epoch flushed, nothing to extract
             top, n_hh = [], 0
-        print(
-            json.dumps(
-                {
-                    "heavy_hitters": n_hh,
-                    "top": top,
-                    "cands_epochs_compacted": cands_removed,
-                    "totals_epochs_compacted": totals_removed,
-                    "state": args.state,
-                }
-            )
+        return _emit(
+            heavy_hitters=n_hh, top=top, cands_epochs_compacted=cands_removed,
+            totals_epochs_compacted=totals_removed, state=args.state,
         )
-        return 0
 
     if args.command == "annindex":
         import os
 
-        from otlp2parquet_spark.session import get_spark
         from otlp2parquet_spark.streaming import pipeline as stream_pipeline
 
-        spark = get_spark(app_name="otlp2parquet-annindex")
         q = stream_pipeline.ivfpq_index_stream(
             spark, args.landing_dir, args.index, args.checkpoint
         )
@@ -704,121 +722,23 @@ def main(argv: list[str] | None = None) -> int:
             n_codes, n_vecs = codes.agg(
                 F.count("*"), F.countDistinct("vec_id")
             ).first()
-        print(
-            json.dumps(
-                {
-                    "vectors_encoded": int(n_vecs),
-                    "code_rows": int(n_codes),
-                    "codes_epochs_compacted": compacted,
-                    "index": args.index,
-                }
-            )
+        return _emit(
+            vectors_encoded=int(n_vecs), code_rows=int(n_codes),
+            codes_epochs_compacted=compacted, index=args.index,
         )
-        return 0
 
     if args.command == "dsirtrain":
         from otlp2parquet_spark.extensions.pipeline import (
             dsir_build_model,
             dsir_write_model,
         )
-        from otlp2parquet_spark.session import get_spark
 
-        spark = get_spark(app_name="otlp2parquet-dsirtrain")
         docs = spark.read.parquet(args.corpus_dir)
         model, th = dsir_build_model(docs)
         dsir_write_model(spark, model, th, args.model)
-        print(
-            json.dumps(
-                {
-                    "model_buckets": model.count(),
-                    "threshold_micro": int(th),
-                    "model": args.model,
-                }
-            )
+        return _emit(
+            model_buckets=model.count(), threshold_micro=int(th), model=args.model,
         )
-        return 0
-
-    if args.command == "badmit":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-badmit")
-        q = stream_pipeline.budget_admit_stream(
-            spark, args.landing_dir, args.state, args.budget, args.checkpoint
-        )
-        q.awaitTermination()
-        compacted = 0
-        if args.compact:
-            compacted = stream_pipeline.compact_budget_verdicts(spark, args.state)
-        n_total = n_adm = 0
-        tok_adm = 0
-        v = _epoch_table(
-            spark,
-            os.path.join(args.state, "verdicts"),
-            "doc_id long, n_tok long, admitted boolean, epoch int",
-        )
-        if v is not None:
-            n_total, n_adm, tok_adm = v.agg(
-                F.count("*"),
-                F.sum(F.col("admitted").cast("long")),
-                F.sum(F.when(F.col("admitted"), F.col("n_tok")).otherwise(0)),
-            ).first()
-        print(
-            json.dumps(
-                {
-                    "docs_seen": int(n_total),
-                    "docs_admitted": int(n_adm or 0),
-                    "tokens_admitted": int(tok_adm or 0),
-                    "budget": args.budget,
-                    "verdict_epochs_compacted": compacted,
-                    "state": args.state,
-                }
-            )
-        )
-        return 0
-
-    if args.command == "dsirselect":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-dsirselect")
-        q = stream_pipeline.dsir_select_stream(
-            spark, args.landing_dir, args.model, args.out, args.checkpoint
-        )
-        q.awaitTermination()
-        compacted = 0
-        if args.compact:
-            compacted = stream_pipeline.compact_dsir_verdicts(spark, args.out)
-        n_total = n_keep = 0
-        v = _epoch_table(
-            spark,
-            args.out,
-            "doc_id long, liw_micro long, n_tok long, keep boolean, "
-            "epoch int",
-        )
-        if v is not None:
-            n_total, n_keep = v.agg(
-                F.count("*"), F.sum(F.col("keep").cast("long"))
-            ).first()
-        print(
-            json.dumps(
-                {
-                    "docs_scored": int(n_total),
-                    "selected": int(n_keep or 0),
-                    "verdict_epochs_compacted": compacted,
-                    "out": args.out,
-                }
-            )
-        )
-        return 0
 
     if args.command == "qtrain":
         from pyspark.sql import functions as F
@@ -830,9 +750,7 @@ def main(argv: list[str] | None = None) -> int:
             qc_write_model,
             quality_classifier_train,
         )
-        from otlp2parquet_spark.session import get_spark
 
-        spark = get_spark(app_name="otlp2parquet-qtrain")
         docs = spark.read.parquet(args.corpus_dir).select("doc_id", "text")
         # corpus-derived shard count (metadata-only parquet count)
         shards = qc_shards_for(docs.count())
@@ -841,247 +759,42 @@ def main(argv: list[str] | None = None) -> int:
         w = quality_classifier_train(feat, rounds=rounds, shards=shards)
         qc_write_model(spark, w, args.model, shards=shards, rounds=rounds)
         n, n_pos = feat.agg(F.count("*"), F.sum("y")).first()
-        print(
-            json.dumps(
-                {
-                    "docs_trained": int(n),
-                    "label_balance": int(n_pos or 0),
-                    "nonzero_weights": sum(1 for v in w if v),
-                    "shards": shards,
-                    "model": args.model,
-                }
-            )
+        return _emit(
+            docs_trained=int(n), label_balance=int(n_pos or 0),
+            nonzero_weights=sum(1 for v in w if v), shards=shards, model=args.model,
         )
-        return 0
 
     if args.command == "dctrain":
         from otlp2parquet_spark.extensions.pipeline import (
             decontam_read_benchset,
             decontam_write_benchset,
         )
-        from otlp2parquet_spark.session import get_spark
 
-        spark = get_spark(app_name="otlp2parquet-dctrain")
         bench = spark.read.parquet(args.bench_dir).select("doc_id", "text")
         decontam_write_benchset(bench, args.benchset)
         n = decontam_read_benchset(spark, args.benchset).count()
-        print(json.dumps({"bench_grams": int(n), "benchset": args.benchset}))
-        return 0
-
-    if args.command == "dcscore":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.extensions.pipeline import decontam_read_benchset
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-dcscore")
-        q = stream_pipeline.decontam_stream(
-            spark, args.landing_dir, args.benchset, args.out, args.checkpoint
-        )
-        q.awaitTermination()
-        compacted = 0
-        if args.compact:
-            compacted = stream_pipeline.compact_decontam_verdicts(spark, args.out)
-        n_total = n_bad = 0
-        # explicit schema: rowless epochs (a zero-gram drain) must
-        # summarize zero, not fail schema inference
-        v = _epoch_table(
-            spark,
-            args.out,
-            "doc_id long, n_grams long, n_hits long, "
-            "contamination double, contaminated boolean, epoch int",
-        )
-        if v is not None:
-            n_total, n_bad = v.agg(
-                F.count("*"), F.sum(F.col("contaminated").cast("long"))
-            ).first()
-        print(
-            json.dumps(
-                {
-                    "docs_scored": int(n_total),
-                    "contaminated": int(n_bad or 0),
-                    "verdict_epochs_compacted": compacted,
-                    "out": args.out,
-                }
-            )
-        )
-        return 0
+        return _emit(bench_grams=int(n), benchset=args.benchset)
 
     if args.command == "lmtrain":
         from otlp2parquet_spark.extensions.text import lm_read_model, lm_write_model
-        from otlp2parquet_spark.session import get_spark
 
-        spark = get_spark(app_name="otlp2parquet-lmtrain")
         docs = spark.read.parquet(args.corpus_dir).select("doc_id", "text", "source")
         lm_write_model(docs, args.model)
         _m, _p, vocab, n_model, _np = lm_read_model(spark, args.model)
-        print(
-            json.dumps(
-                {
-                    "model_bigram_types": int(n_model),
-                    "sources": vocab.count(),
-                    "model": args.model,
-                }
-            )
+        return _emit(
+            model_bigram_types=int(n_model), sources=vocab.count(), model=args.model,
         )
-        return 0
-
-    if args.command == "lmscore":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-lmscore")
-        q = stream_pipeline.lmscore_stream(
-            spark, args.landing_dir, args.model, args.out, args.checkpoint
-        )
-        q.awaitTermination()
-        compacted = 0
-        if args.compact:
-            compacted = stream_pipeline.compact_lm_scores(spark, args.out)
-        n_total = 0
-        mean_score = None
-        # explicit schema: a drain whose every doc has <2 tokens writes
-        # rowless epochs (_SUCCESS only) that schema inference chokes on
-        scores = _epoch_table(
-            spark,
-            args.out,
-            "doc_id long, source string, n_bigrams long, "
-            "lm_score double, epoch int",
-        )
-        if scores is not None:
-            n_total, mean_score = scores.agg(
-                F.count("*"), F.round(F.avg("lm_score"), 4)
-            ).first()
-        print(
-            json.dumps(
-                {
-                    "docs_scored": int(n_total),
-                    "mean_lm_score": None if mean_score is None else float(mean_score),
-                    "score_epochs_compacted": compacted,
-                    "out": args.out,
-                }
-            )
-        )
-        return 0
-
-    if args.command == "qscore":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-qscore")
-        q = stream_pipeline.quality_score_stream(
-            spark, args.landing_dir, args.model, args.out, args.checkpoint
-        )
-        q.awaitTermination()
-        compacted = 0
-        if args.compact:
-            compacted = stream_pipeline.compact_quality_scores(spark, args.out)
-        n_total = n_keep = 0
-        # first_epoch_rows: crash-window copies AND re-delivered docs
-        # (second verdict differs) resolve to the first epoch's row
-        scores = _epoch_table(
-            spark, args.out, "doc_id long, y int, z long, pred int, epoch int"
-        )
-        if scores is not None:
-            n_total, n_keep = scores.agg(
-                F.count("*"), F.sum(F.col("pred").cast("long"))
-            ).first()
-        print(
-            json.dumps(
-                {
-                    "docs_scored": int(n_total),
-                    "predicted_quality": int(n_keep or 0),
-                    "score_epochs_compacted": compacted,
-                    "out": args.out,
-                }
-            )
-        )
-        return 0
-
-    if args.command == "funnel":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-funnel")
-        q = stream_pipeline.ingest_funnel_stream(
-            spark,
-            args.landing_dir,
-            args.state,
-            args.qc_model,
-            args.benchset,
-            args.checkpoint,
-        )
-        q.awaitTermination()
-        compacted = (0, 0, 0)
-        if args.compact:
-            compacted = stream_pipeline.compact_ingest_funnel(spark, args.state)
-        counts = {"n_docs": 0, "k1": 0, "k2": 0, "k3": 0, "k4": 0}
-        # explicit schema (rowless epochs) + first_epoch_rows: a doc
-        # re-delivered in a later landing file is verdicted AGAIN with
-        # different k1..k4 (the exact stage marks the replay a
-        # duplicate); an arbitrary-winner dedup makes the printed
-        # kept_* counts nondeterministic — keep the FIRST verdict
-        led = _epoch_table(
-            spark,
-            os.path.join(args.state, "verdicts"),
-            "doc_id long, source string, k1 boolean, k2 boolean, "
-            "k3 boolean, k4 boolean, epoch int",
-        )
-        if led is not None:
-            row = led.agg(
-                F.count("*"),
-                *[F.sum(F.col(k).cast("long")) for k in ("k1", "k2", "k3", "k4")],
-            ).first()
-            counts = {
-                "n_docs": int(row[0]),
-                **{k: int(row[i + 1] or 0) for i, k in enumerate(("k1", "k2", "k3", "k4"))},
-            }
-        print(
-            json.dumps(
-                {
-                    "docs_ingested": counts["n_docs"],
-                    "kept_exact": counts["k1"],
-                    "kept_neardup": counts["k2"],
-                    "kept_quality": counts["k3"],
-                    "kept_clean": counts["k4"],
-                    "compacted": {
-                        "hash_epochs": compacted[0],
-                        "band_epochs": compacted[1],
-                        "verdict_epochs": compacted[2],
-                    },
-                    "state": args.state,
-                }
-            )
-        )
-        return 0
 
     if args.command == "zorder":
         from pyspark.sql import functions as F
         from pyspark.sql import types as SQLT
 
         from otlp2parquet_spark.layout import grid16, zorder_write, zvalue16
-        from otlp2parquet_spark.session import get_spark
 
         cols = [c.strip() for c in args.by.split(",")]
         if len(cols) != 2:
             print(json.dumps({"error": "--by needs exactly two columns"}))
             return 2
-        spark = get_spark(app_name="otlp2parquet-zorder")
         df = spark.read.parquet(args.input_dir)
 
         types = {fld.name: fld.dataType for fld in df.schema.fields}
@@ -1114,47 +827,13 @@ def main(argv: list[str] | None = None) -> int:
             zed, zcol, args.output_dir, n_files=args.files, drop=("_zx", "_zy")
         )
         n = spark.read.parquet(args.output_dir).count()
-        print(
-            json.dumps(
-                {
-                    "rows": int(n),
-                    "by": cols,
-                    "files": args.files,
-                    "output": args.output_dir,
-                }
-            )
-        )
-        return 0
-
-    if args.command == "serve":
-        from otlp2parquet_spark.otel import receiver
-
-        srv = receiver.make_server(
-            args.landing_root,
-            args.host,
-            cfg.server["port"],
-            max_payload_bytes=cfg.request["max_payload_bytes"],
-            quiet=False,
-        )
-        print(
-            f"listening on {args.host}:{srv.server_address[1]}, "
-            f"landing -> {args.landing_root}"
-        )
-        try:
-            srv.serve_forever()
-        except KeyboardInterrupt:
-            pass
-        finally:
-            srv.server_close()
-        return 0
+        return _emit(rows=int(n), by=cols, files=args.files, output=args.output_dir)
 
     if args.command in ("ingest", "stream"):
         from otlp2parquet_spark.otel import config as cfgmod
         from otlp2parquet_spark.otel import ingest as batch_ingest
-        from otlp2parquet_spark.otel import schemas, writer
-        from otlp2parquet_spark.session import get_spark
+        from otlp2parquet_spark.otel import writer
 
-        spark = get_spark(app_name=f"otlp2parquet-{args.command}")
         cfgmod.apply_storage_conf(spark, cfg)
         root = cfg.output_root()
         layout = cfg.engine["layout"]
@@ -1190,8 +869,10 @@ def main(argv: list[str] | None = None) -> int:
                 resp["quarantined"] = {
                     r.code: r["count"] for r in qdf.groupBy("code").count().collect()
                 }
-            print(json.dumps(resp))
-            return 0
+            # files refused before decode: oversized (D4) or unknown extension (D3)
+            rej = tables["_rejected"].groupBy("reason").count().collect()
+            resp["rejected"] = {r.reason: r["count"] for r in rej}
+            return _emit(**resp)
 
         from otlp2parquet_spark.streaming.ingest import stream_ingest
 
@@ -1209,9 +890,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         q.awaitTermination()
         return 0
-
-    _build_parser().print_help()
-    return 0
 
 
 if __name__ == "__main__":

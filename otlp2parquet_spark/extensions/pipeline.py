@@ -1044,16 +1044,31 @@ def x6_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a >64-source corpus must fail LOUDLY, not corrupt masks — the same
     # contract the old driver-side NotImplementedError enforced, now
     # raised at execution from inside the plan
-    guarded_sidx = F.when(F.col("sidx") < 64, F.col("sidx")).otherwise(
-        F.raise_error(
-            F.concat(
+    # a NULL-source doc has no pair to attribute overlap to; the left join
+    # below keeps it (sidx NULL) so it fails LOUDLY here instead of being
+    # silently dropped by an inner join
+    guarded_sidx = (
+        F.when(F.col("sidx") < 64, F.col("sidx"))
+        .when(
+            F.col("source").isNull(),
+            F.raise_error(
                 F.lit(
-                    "x6_source_overlap's single-lane bitmask form supports "
-                    "<= 64 sources; shard source-group pairs across lanes "
-                    "(offending source: "
-                ),
-                F.col("source"),
-                F.lit(")"),
+                    "x6_source_overlap needs a non-NULL source on every "
+                    "document (found a NULL source)"
+                )
+            ),
+        )
+        .otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(
+                        "x6_source_overlap's single-lane bitmask form supports "
+                        "<= 64 sources; shard source-group pairs across lanes "
+                        "(offending source: "
+                    ),
+                    F.col("source"),
+                    F.lit(")"),
+                )
             )
         )
     )
@@ -1064,7 +1079,7 @@ def x6_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per doc and cost ~0.9 s at sf0.1 — guide §3.3 "explode before a join
     # multiplies the shuffle", here it multiplied the probe)
     per_doc = (
-        d.join(F.broadcast(sidx_frame), "source")
+        d.join(F.broadcast(sidx_frame), "source", "left")
         .select(
             guarded_sidx.alias("sidx"),
             F.explode(F.array_distinct(gram3_expr(toks))).alias("gram"),

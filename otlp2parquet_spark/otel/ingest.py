@@ -590,17 +590,6 @@ def skipped_metrics(union_df: DataFrame) -> DataFrame:
     )
 
 
-def decode_metrics(
-    payloads: DataFrame, on_error: str = "raise", include_summary: bool = False
-) -> dict[str, DataFrame]:
-    """{metric_type: golden-typed DataFrame} for the persisted types
-    (+ 'summary' when include_summary — the schema exists, the server
-    pipeline drops the rows; reference tests/e2e.rs:114-126)."""
-    union_df = decode_metrics_union(payloads, on_error)
-    types = list(schemas.PERSISTED_METRIC_TYPES) + (["summary"] if include_summary else [])
-    return {t: metrics_table(union_df, t) for t in types}
-
-
 # ---------------------------------------------------------------------------
 # Ingest observability + response accounting (D26/D27)
 
@@ -611,7 +600,7 @@ def observed(df: DataFrame, name: str):
     src/handlers.rs:102-103).
 
     Returns (df, Observation): the metrics ride the caller's own action (the
-    partitioned write, a count, ...) — no second job, unlike `ingest_summary`.
+    partitioned write, a count, ...) — no second counting job.
     `Observation.get` blocks until that action completes.
     """
     from pyspark.sql import Observation
@@ -625,17 +614,6 @@ def observed(df: DataFrame, name: str):
         F.approx_count_distinct("ServiceName").alias("approx_services"),
     )
     return out, obs
-
-
-def ingest_summary(decoded: dict[str, "DataFrame | str"]) -> dict[str, int]:
-    """records-processed accounting dict (reference src/handlers.rs:191-198).
-    Batch-mode counts; in streaming this becomes `observe()` metrics.
-    Non-frame metadata entries (ingest_directory's '_lane') are skipped."""
-    return {
-        name: df.count()
-        for name, df in decoded.items()
-        if isinstance(df, DataFrame)
-    }
 
 
 def ingest_directory(

@@ -25,10 +25,8 @@ from __future__ import annotations
 
 import os
 import uuid
-from collections.abc import Iterator
 from datetime import datetime, timezone
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window
@@ -107,24 +105,6 @@ def _resolve_fs(path: str):
 
     uri = path.replace("s3a://", "s3://", 1)
     return pafs.FileSystem.from_uri(uri)
-
-
-def _to_golden_arrow(pdf: pd.DataFrame, table: str) -> pa.Table:
-    """pandas group (Spark types) -> pyarrow table with the golden schema
-    (incl. uint32 cast + field_ids + footer metadata). Kept for tests and
-    ad-hoc callers; the hot write path is the zero-copy Arrow variant."""
-    target = schemas.arrow_schema(table)
-    arrays = []
-    for f in target:
-        col = pdf[f.name]
-        if pa.types.is_timestamp(f.type):
-            arr = pa.Array.from_pandas(col, type=f.type)
-        elif pa.types.is_list(f.type):
-            arr = pa.array(col.tolist(), type=f.type)
-        else:
-            arr = pa.array(col.tolist(), type=f.type)
-        arrays.append(arr)
-    return pa.Table.from_arrays(arrays, schema=target)
 
 
 def _arrow_to_golden(tbl: pa.Table, table: str) -> pa.Table:

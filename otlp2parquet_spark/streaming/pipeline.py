@@ -25,7 +25,6 @@ availableNow must reproduce the batch twin's results exactly).
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -564,6 +563,29 @@ def _require_local_state(path: str, what: str) -> None:
         )
 
 
+def _drain(
+    spark: SparkSession,
+    landing_dir: str,
+    schema: StructType,
+    flush,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+):
+    """The one readStream -> foreachBatch -> availableNow loop every lane
+    below runs: drain the files in landing_dir that the checkpoint has not
+    seen yet, max_files_per_trigger files per micro-batch, through
+    flush(batch_df, epoch_id), then stop. Returns the started query."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(landing_dir)
+        .writeStream.foreachBatch(flush)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def _nb_for_rows(rows: int, rows_per_bucket: int = BAND_ROWS_PER_BUCKET) -> int:
     """Power-of-two bucket count targeting ~rows_per_bucket rows per bucket,
     clamped to [1, _BAND_MAXNB] so nb always divides _BAND_MAXNB."""
@@ -728,7 +750,6 @@ def neardup_stream(
     state_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
     rows_per_bucket: int = BAND_ROWS_PER_BUCKET,
 ):
     """Streaming first-seen MinHash-LSH dedup: the live form of batch
@@ -762,17 +783,10 @@ def neardup_stream(
     compaction re-buckets (measured flat in BASELINE.md r8; before r8 the
     probe scanned the whole corpus-sized index every micro-batch). Epochs
     compact like any streaming lake table (compact_band_index)."""
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
+    flush = make_neardup_flush(spark, state_dir, rows_per_bucket=rows_per_bucket)
+    return _drain(
+        spark, landing_dir, DOCS_SCHEMA, flush, checkpoint_dir, max_files_per_trigger
     )
-    ws = stream.writeStream.foreachBatch(
-        make_neardup_flush(spark, state_dir, rows_per_bucket=rows_per_bucket)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        ws = ws.trigger(availableNow=True)
-    return ws.start()
 
 
 def compact_band_index(
@@ -956,16 +970,8 @@ def ivfpq_index_stream(
         finally:
             batch.unpersist()
 
-    stream = (
-        spark.readStream.schema(EMBED_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(flush)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark, landing_dir, EMBED_SCHEMA, flush, checkpoint_dir, max_files_per_trigger
     )
 
 
@@ -1087,19 +1093,20 @@ def compact_codes_index(spark: SparkSession, index_path: str) -> int:
     )
 
 
-def compact_flags(spark: SparkSession, state_dir: str) -> int:
-    """Compact neardup_stream's epoch-partitioned per-doc verdicts — flags
-    are append-only (each doc is verdicted by exactly one epoch), so the
-    same plain-union consolidation as the codes table applies; rows sort
-    by doc_id for range locality. Contract: _compact_union_epochs."""
-    import os
-
-    _require_local_state(state_dir, "compact_flags")
+def compact_verdicts(spark: SparkSession, table_dir: str) -> int:
+    """Compact one lane's epoch-partitioned per-doc verdict table: the
+    neardup/xdedup flags, the badmit and funnel verdicts, and the
+    qscore/dsirselect/dcscore/lmscore outputs. Verdicts are append-only
+    (each doc is verdicted by exactly one epoch; a re-delivered doc keeps
+    its first epoch's row), so the union-epochs contract applies, keyed
+    and sorted by doc_id for range locality. Contract:
+    _compact_union_epochs. Returns the net number of epoch partitions
+    removed. badmit's per-epoch totals are NOT verdicts: they are its
+    replay state, and merging them would change every later epoch's
+    offset, so they stay per-epoch."""
+    _require_local_state(table_dir, "compact_verdicts")
     return _compact_union_epochs(
-        spark,
-        os.path.join(state_dir, "flags"),
-        key_cols=("doc_id",),
-        sort_cols=("doc_id",),
+        spark, table_dir, key_cols=("doc_id",), sort_cols=("doc_id",)
     )
 
 
@@ -1130,7 +1137,7 @@ def quality_score_stream(
     union of the inputs — across any micro-batch slicing and any
     stop/restart. Writes are per-epoch directory overwrites (the
     neardup_stream file-level exactly-once discipline); epochs compact
-    like any append-only verdict table (compact_quality_scores).
+    like any append-only verdict table (compact_verdicts).
 
     Scale shape per micro-batch: one tokenize pass over the batch, one
     batch-sized (doc,bucket) count agg, a broadcast join against the
@@ -1148,27 +1155,8 @@ def quality_score_stream(
             "overwrite"
         ).parquet(os.path.join(out_dir, f"epoch={int(epoch_id)}"))
 
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(flush)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def compact_quality_scores(spark: SparkSession, out_dir: str) -> int:
-    """Compact quality_score_stream's epoch-partitioned verdicts — the
-    same append-only consolidation as the T11 flags table (each doc is
-    scored by exactly one epoch); rows sort by doc_id for range locality.
-    Contract: _compact_union_epochs."""
-    _require_local_state(out_dir, "compact_quality_scores")
-    return _compact_union_epochs(
-        spark, out_dir, key_cols=("doc_id",), sort_cols=("doc_id",)
+    return _drain(
+        spark, landing_dir, DOCS_SCHEMA, flush, checkpoint_dir, max_files_per_trigger
     )
 
 
@@ -1204,7 +1192,7 @@ def dsir_select_stream(
     (doc,bucket) count agg, one broadcast join against the B-row model —
     no state beyond the frozen artifacts. Writes are per-epoch directory
     overwrites (the file-level exactly-once discipline); epochs compact
-    via compact_dsir_verdicts."""
+    via compact_verdicts."""
     import os
 
     from otlp2parquet_spark.extensions.pipeline import (
@@ -1228,25 +1216,8 @@ def dsir_select_stream(
             "overwrite"
         ).parquet(os.path.join(out_dir, f"epoch={int(epoch_id)}"))
 
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(flush)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def compact_dsir_verdicts(spark: SparkSession, out_dir: str) -> int:
-    """Compact dsir_select_stream's epoch-partitioned verdicts — append-only
-    per-doc rows, same contract as the T13 score table."""
-    _require_local_state(out_dir, "compact_dsir_verdicts")
-    return _compact_union_epochs(
-        spark, out_dir, key_cols=("doc_id",), sort_cols=("doc_id",)
+    return _drain(
+        spark, landing_dir, DOCS_SCHEMA, flush, checkpoint_dir, max_files_per_trigger
     )
 
 
@@ -1441,7 +1412,6 @@ def exactdedup_stream(
     state_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
     rows_per_bucket: int = BAND_ROWS_PER_BUCKET,
 ):
     """Streaming first-seen EXACT dedup: the live form of batch
@@ -1470,17 +1440,10 @@ def exactdedup_stream(
     compaction re-buckets (the measured-flat T11 property; the index and
     probe layouts are the same code paths). Epochs compact via
     compact_hash_index."""
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
+    flush = make_exactdedup_flush(spark, state_dir, rows_per_bucket=rows_per_bucket)
+    return _drain(
+        spark, landing_dir, DOCS_SCHEMA, flush, checkpoint_dir, max_files_per_trigger
     )
-    ws = stream.writeStream.foreachBatch(
-        make_exactdedup_flush(spark, state_dir, rows_per_bucket=rows_per_bucket)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        ws = ws.trigger(availableNow=True)
-    return ws.start()
 
 
 def compact_hash_index(
@@ -1501,20 +1464,6 @@ def compact_hash_index(
         rows_per_bucket,
         "compact_hash_index",
         "h string, first_id long",
-    )
-
-
-def compact_dedup_flags(spark: SparkSession, state_dir: str) -> int:
-    """Compact exactdedup_stream's epoch-partitioned verdicts — append-only
-    per-doc rows, the T11 flags contract."""
-    import os
-
-    _require_local_state(state_dir, "compact_dedup_flags")
-    return _compact_union_epochs(
-        spark,
-        os.path.join(state_dir, "flags"),
-        key_cols=("doc_id",),
-        sort_cols=("doc_id",),
     )
 
 
@@ -1580,7 +1529,6 @@ def heavyhitters_stream(
     state_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
 ):
     """Streaming heavy-hitter candidate maintenance: the live form of
     x4_heavy_hitters' pass 1 (extensions/text.py). Every arriving
@@ -1601,17 +1549,10 @@ def heavyhitters_stream(
     row written per epoch — state growth is epochs x K-bounded, never
     vocab-bounded, and compact_hh_state collapses history to the distinct
     candidate union."""
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
+    flush = make_heavyhitters_flush(spark, state_dir)
+    return _drain(
+        spark, landing_dir, DOCS_SCHEMA, flush, checkpoint_dir, max_files_per_trigger
     )
-    ws = stream.writeStream.foreachBatch(
-        make_heavyhitters_flush(spark, state_dir)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        ws = ws.trigger(availableNow=True)
-    return ws.start()
 
 
 def heavy_hitters_from_state(
@@ -1729,25 +1670,8 @@ def lmscore_stream(
             os.path.join(out_dir, f"epoch={int(epoch_id)}")
         )
 
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(flush)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def compact_lm_scores(spark: SparkSession, out_dir: str) -> int:
-    """Compact lmscore_stream's epoch-partitioned verdicts — append-only
-    per-doc rows, the T13 contract."""
-    _require_local_state(out_dir, "compact_lm_scores")
-    return _compact_union_epochs(
-        spark, out_dir, key_cols=("doc_id",), sort_cols=("doc_id",)
+    return _drain(
+        spark, landing_dir, DOCS_SCHEMA, flush, checkpoint_dir, max_files_per_trigger
     )
 
 
@@ -1895,25 +1819,8 @@ def decontam_stream(
             "overwrite"
         ).parquet(os.path.join(out_dir, f"epoch={int(epoch_id)}"))
 
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(flush)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def compact_decontam_verdicts(spark: SparkSession, out_dir: str) -> int:
-    """Compact decontam_stream's epoch-partitioned verdicts — append-only
-    per-doc rows, the T13 contract."""
-    _require_local_state(out_dir, "compact_decontam_verdicts")
-    return _compact_union_epochs(
-        spark, out_dir, key_cols=("doc_id",), sort_cols=("doc_id",)
+    return _drain(
+        spark, landing_dir, DOCS_SCHEMA, flush, checkpoint_dir, max_files_per_trigger
     )
 
 
@@ -2089,20 +1996,11 @@ def ingest_funnel_stream(
     # t21_funnel_skeleton form; see make_ingest_funnel_flush)
     w = None if qc_model_path is None else qc_read_model(spark, qc_model_path)
     bench = decontam_read_benchset(spark, benchset_dir)
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
+    flush = make_ingest_funnel_flush(
+        spark, state_dir, w, bench, rows_per_bucket=rows_per_bucket
     )
-    return (
-        stream.writeStream.foreachBatch(
-            make_ingest_funnel_flush(
-                spark, state_dir, w, bench, rows_per_bucket=rows_per_bucket
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark, landing_dir, DOCS_SCHEMA, flush, checkpoint_dir, max_files_per_trigger
     )
 
 
@@ -2121,12 +2019,7 @@ def compact_ingest_funnel(
     _require_local_state(state_dir, "compact_ingest_funnel")
     n_h = compact_hash_index(spark, state_dir, rows_per_bucket=rows_per_bucket)
     n_b = compact_band_index(spark, state_dir, rows_per_bucket=rows_per_bucket)
-    n_v = _compact_union_epochs(
-        spark,
-        os.path.join(state_dir, "verdicts"),
-        key_cols=("doc_id",),
-        sort_cols=("doc_id",),
-    )
+    n_v = compact_verdicts(spark, os.path.join(state_dir, "verdicts"))
     return n_h, n_b, n_v
 
 
@@ -2244,33 +2137,9 @@ def budget_admit_stream(
     union of the inputs, across slicings, restarts and replays — all
     quantities are exact integers."""
     _require_local_state(state_dir, "budget_admit_stream")
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            make_budget_admit_flush(spark, state_dir, budget)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def compact_budget_verdicts(spark: SparkSession, state_dir: str) -> int:
-    """Compact budget_admit_stream's epoch-partitioned verdicts (totals
-    stay per-epoch: they ARE the replay state — one tiny row each — and
-    merging them would change every later epoch's offset derivation)."""
-    import os
-
-    _require_local_state(state_dir, "compact_budget_verdicts")
-    return _compact_union_epochs(
-        spark,
-        os.path.join(state_dir, "verdicts"),
-        key_cols=("doc_id",),
-        sort_cols=("doc_id",),
+    flush = make_budget_admit_flush(spark, state_dir, budget)
+    return _drain(
+        spark, landing_dir, DOCS_SCHEMA, flush, checkpoint_dir, max_files_per_trigger
     )
 
 
@@ -2350,16 +2219,9 @@ def sample_stream(
     batch twin over the union of the inputs (the hash order is a pure
     function of the docs), state is k rows regardless of corpus size."""
     _require_local_state(state_dir, "sample_stream")
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(make_sample_flush(spark, state_dir, k))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    flush = make_sample_flush(spark, state_dir, k)
+    return _drain(
+        spark, landing_dir, DOCS_SCHEMA, flush, checkpoint_dir, max_files_per_trigger
     )
 
 

@@ -306,3 +306,25 @@ def test_dsir_train_on_empty_corpus_raises_documented(spark):
 
     with pytest.raises(ValueError, match="empty training corpus"):
         dsir_build_model(_empty_docs(spark))
+
+
+def test_source_overlap_null_source_fails_loudly(spark, tmp_path):
+    """A NULL-source document has no source pair to count overlap for. An
+    inner join on source used to drop it silently; the op must instead
+    fail with a message that names the cause."""
+    from otlp2parquet_spark.extensions.pipeline import x6_source_overlap
+    from otlp2parquet_spark.session import load_table
+    from tests.conftest import SF_SMOKE
+
+    docs = load_table(spark, SF_SMOKE, "documents").orderBy("doc_id").limit(40)
+    first = docs.first().doc_id
+    sf = str(tmp_path / "sf")
+    docs.withColumn(
+        "source",
+        F.when(F.col("doc_id") == first, F.lit(None)).otherwise(F.col("source")),
+    ).write.parquet(os.path.join(sf, "documents.parquet"))
+    # the NULL-source doc is long enough to yield trigrams, so it reaches
+    # the gram pass rather than exploding to nothing
+    assert len(docs.first().text.split()) >= 3
+    with pytest.raises(Exception, match="non-NULL source"):
+        x6_source_overlap(spark, sf).collect()

@@ -20,7 +20,7 @@ from otlp2parquet_spark.extensions.pipeline import (
 )
 from otlp2parquet_spark.session import load_table
 from otlp2parquet_spark.streaming.pipeline import (
-    compact_decontam_verdicts,
+    compact_verdicts,
     decontam_stream,
 )
 
@@ -121,7 +121,7 @@ def test_live_equals_batch_and_catches_planted_contamination(spark, tmp_path):
     assert got == want
 
     # compaction preserves the verdicts bit-for-bit
-    removed = compact_decontam_verdicts(spark, out)
+    removed = compact_verdicts(spark, out)
     assert removed >= 1
     assert sorted(map(tuple, spark.read.parquet(out).select(*COLS).collect())) == want
 

@@ -18,7 +18,7 @@ from otlp2parquet_spark.extensions.pipeline import (
 from otlp2parquet_spark.queries.registry import all_specs
 from otlp2parquet_spark.session import load_table
 from otlp2parquet_spark.streaming.pipeline import (
-    compact_dsir_verdicts,
+    compact_verdicts,
     dsir_select_stream,
 )
 
@@ -93,7 +93,7 @@ def test_stream_verdicts_bit_identical_and_restartable(spark, tmp_path):
     want = sorted(map(tuple, dsir_score(docs, model, th).select(*cols).collect()))
     assert got == want
     # epochs accreted; compaction preserves the exact verdict set
-    removed = compact_dsir_verdicts(spark, out)
+    removed = compact_verdicts(spark, out)
     assert removed >= 1
     assert sorted(map(tuple, spark.read.parquet(out).select(*cols).collect())) == want
 

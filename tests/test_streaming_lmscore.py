@@ -22,7 +22,7 @@ from otlp2parquet_spark.extensions.text import (
 )
 from otlp2parquet_spark.queries.registry import all_specs
 from otlp2parquet_spark.session import load_table
-from otlp2parquet_spark.streaming.pipeline import compact_lm_scores, lmscore_stream
+from otlp2parquet_spark.streaming.pipeline import compact_verdicts, lmscore_stream
 import pytest
 
 # full tier (r13, verdict ask #4): heavy sweep/replay module, excluded
@@ -102,7 +102,7 @@ def test_live_equals_twin_across_slicings_and_restart(spark, tmp_path):
     assert sorted(map(tuple, spark.read.parquet(out2).select(*COLS).collect())) == want
 
     # compaction preserves the verdicts bit-for-bit
-    removed = compact_lm_scores(spark, out)
+    removed = compact_verdicts(spark, out)
     assert removed >= 1
     assert sorted(map(tuple, spark.read.parquet(out).select(*COLS).collect())) == want
 

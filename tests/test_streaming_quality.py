@@ -18,7 +18,7 @@ from otlp2parquet_spark.extensions.text import (
 )
 from otlp2parquet_spark.session import load_table
 from otlp2parquet_spark.streaming.pipeline import (
-    compact_quality_scores,
+    compact_verdicts,
     quality_score_stream,
 )
 
@@ -83,7 +83,7 @@ def test_stream_scores_bit_identical_to_batch_and_compact(spark, tmp_path):
     # multiple epochs accreted; compaction preserves the exact verdict set
     epochs = {d for d in os.listdir(out) if d.startswith("epoch=")}
     assert len(epochs) >= 3
-    removed = compact_quality_scores(spark, out)
+    removed = compact_verdicts(spark, out)
     assert removed >= 1
     assert sorted(map(tuple, spark.read.parquet(out).select("doc_id", "y", "z", "pred").collect())) == want
 
