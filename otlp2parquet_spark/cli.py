@@ -836,7 +836,6 @@ def main(argv: list[str] | None = None) -> int:
 
         cfgmod.apply_storage_conf(spark, cfg)
         root = cfg.output_root()
-        layout = cfg.engine["layout"]
 
         if args.command == "ingest":
             tables = batch_ingest.ingest_directory(
@@ -846,20 +845,14 @@ def main(argv: list[str] | None = None) -> int:
                 max_payload_bytes=cfg.request["max_payload_bytes"],
                 quarantine_dir=args.quarantine,
             )
-            summary: dict[str, int] = {}
-            for name, df in tables.items():
-                if name.startswith("_"):
-                    continue
-                if layout == "parity":
-                    acct = writer.write_partitioned(
-                        df, name, root, max_rows_per_file=cfg.batch["max_rows"]
-                    )
-                    summary[name] = int(
-                        acct.agg({"rows": "sum"}).collect()[0][0] or 0
-                    )
-                else:
-                    writer.write_native(df, name, root, max_rows_per_file=cfg.batch["max_rows"])
-                    summary[name] = writer.read_table(spark, root, name, layout=layout).count()
+            summary = {
+                name: writer.write_table(
+                    df, name, root, layout=cfg.engine["layout"],
+                    max_rows_per_file=cfg.batch["max_rows"],
+                )
+                for name, df in tables.items()
+                if not name.startswith("_")
+            }
             if "_union" in tables:
                 tables["_union"].unpersist()
             # D27 response-accounting twin
@@ -882,7 +875,7 @@ def main(argv: list[str] | None = None) -> int:
             args.signal,
             root,
             args.checkpoint,
-            layout=layout,
+            layout=cfg.engine["layout"],
             trigger_seconds=None if args.available_now else args.trigger_seconds,
             available_now=args.available_now,
             max_rows_per_file=cfg.batch["max_rows"],

@@ -21,6 +21,10 @@ Reference dataflow D1-D15 re-expressed Spark-first (SURVEY.md §3.1):
 Decoded output uses raw schemas (epoch-µs longs); `finalize()` converts to
 the golden column types JVM-side via `timestamp_micros` (exact integer µs,
 never double math).
+
+Batch (`ingest_directory`) and streaming (streaming/ingest.py) share one
+owner per decision: `split_landing` (D3/D4 acceptance), `decode` (one
+kernel for all three signals) and `split_tables` (signal -> output tables).
 """
 
 from __future__ import annotations
@@ -67,29 +71,45 @@ def payload_format_col(path_col) -> "F.Column":
     return F.when(ext == "", F.lit(None)).otherwise(ext)
 
 
-def _landing_scan(
-    spark: SparkSession, path: str, max_payload_bytes: int, size_col, select_cols
-) -> tuple[DataFrame, DataFrame]:
-    """Shared landing-scan construction for both lanes: one place owns the
-    binaryFile options, the format dispatch, and the D4/D3 rejection rules,
-    so the content lane and the locality lane can never drift apart
-    (test_locality_lane_matches_content_lane holds by construction)."""
-    df = (
+def _binary_files(spark: SparkSession, path: str) -> DataFrame:
+    # binaryFile yields >= 1 scan partition per payload file, so the
+    # CPU-bound decode already parallelizes across files; no repartition
+    # (shuffling raw payload bytes costs more than it buys — measured).
+    return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*")
         .option("recursiveFileLookup", "true")
         .load(path)
-        .select(*select_cols, payload_format_col(F.col("path")).alias("fmt"))
     )
-    # binaryFile yields >= 1 scan partition per payload file, so the
-    # CPU-bound decode already parallelizes across files; no repartition
-    # (shuffling raw payload bytes costs more than it buys — measured).
-    ok = (size_col <= F.lit(max_payload_bytes)) & F.col("fmt").isNotNull()
+
+
+def split_landing(
+    files: DataFrame,
+    max_payload_bytes: int,
+    *,
+    content: bool = True,
+    observe: str | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The landing acceptance rule (D3 format tag, D4 size guard, rejection
+    reason) for every reader, batch or streaming: binaryFile rows ->
+    (accepted (path, [content,] fmt), rejected (path, reason)). The guard
+    reads the `length` metadata, so with content=False binaryFile prunes the
+    payload column. `observe` names a df.observe probe counting rejected
+    rows: a stream's accounting, as it has no side-output to return."""
+    fmt = payload_format_col(F.col("path"))
+    too_large = F.col("length") > F.lit(max_payload_bytes)
+    ok = ~too_large & fmt.isNotNull()
+    if observe:
+        files = files.observe(observe, F.count_if(~ok).alias("rejected"))
     reason = (
-        F.when(F.col("fmt").isNull(), F.lit("unknown format"))
-        .when(size_col > F.lit(max_payload_bytes), F.lit("payload too large"))
+        F.when(fmt.isNull(), F.lit("unknown format"))
+        .when(too_large, F.lit("payload too large"))
     )
-    return df.filter(ok), df.filter(~ok).select("path", reason.alias("reason"))
+    cols = ("path", "content") if content else ("path",)
+    return (
+        files.filter(ok).select(*cols, fmt.alias("fmt")),
+        files.filter(~ok).select("path", reason.alias("reason")),
+    )
 
 
 def read_landing(
@@ -103,9 +123,7 @@ def read_landing(
     Returns binaryFile rows (path, content, fmt); `rejected` carries
     oversized payloads (D4: HTTP 413 twin) and unknown-extension files.
     """
-    return _landing_scan(
-        spark, path, max_payload_bytes, F.length("content"), ("path", "content")
-    )
+    return split_landing(_binary_files(spark, path), max_payload_bytes)
 
 
 def read_landing_meta(
@@ -125,12 +143,9 @@ def read_landing_meta(
     the payload column is the dominant wall cost once decode is fast
     (BASELINE.md round 6), and at 100 TB it would double the I/O path.
     This is the writer's executor-side pyarrow I/O lane in reverse; the
-    size guard (D4) uses binaryFile's `length` metadata (same semantics:
-    pre-decompression byte size)."""
-    accepted, rejected = _landing_scan(
-        spark, path, max_payload_bytes, F.col("length"), ("path", "length")
-    )
-    return accepted.select("path", "fmt"), rejected
+    size guard (D4) uses binaryFile's `length` metadata, as in every
+    lane."""
+    return split_landing(_binary_files(spark, path), max_payload_bytes, content=False)
 
 
 def is_local_or_posix(path: str, default_fs_local: bool = True) -> bool:
@@ -147,16 +162,6 @@ def is_local_or_posix(path: str, default_fs_local: bool = True) -> bool:
     if "://" in path:
         return False
     return default_fs_local
-
-
-def _default_fs_is_local(spark: SparkSession) -> bool:
-    """True when Spark's fs.defaultFS (what binaryFile resolves bare paths
-    against) is the local filesystem."""
-    fs = (
-        spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
-        or "file:///"
-    )
-    return fs.startswith("file:")
 
 
 def read_landing_auto(
@@ -180,7 +185,11 @@ def read_landing_auto(
     Bare paths route by Spark's LIVE fs.defaultFS (what binaryFile resolves
     them against): with fs.defaultFS=hdfs://... a bare '/landing' is remote
     and keeps the content lane."""
-    local = is_local_or_posix(path, _default_fs_is_local(spark))
+    default_fs = (
+        spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+        or "file:///"
+    )
+    local = is_local_or_posix(path, default_fs.startswith("file:"))
     reader = read_landing_meta if local else read_landing
     return reader(spark, path, max_payload_bytes=max_payload_bytes)
 
@@ -340,18 +349,67 @@ def read_landing_lines(spark: SparkSession, path: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Logs / traces decode
+# Decode: one walker dispatch, one mapInArrow kernel for every signal.
+# Metrics decode in a single pass to a union frame tagged by metric type
+# (D10); per-table frames are a filter+select away (never a second decode).
+
+_SKIP_TAG = "skipped"
+
+
+def _metrics_union_schema() -> StructType:
+    """Common prefix + union of all type-specific columns + tag column.
+
+    One decode pass serves all 5 metric tables: each row carries its
+    `MetricType`. Skip accounting (D10/§1.3.12) rides the same frame as
+    `MetricType='skipped'` rows with the counter name in `SkipReason`.
+    """
+    seen: dict[str, StructField] = {}
+    for table in schemas.METRIC_TABLES.values():
+        for f in schemas.raw_spark_schema(table).fields:
+            seen.setdefault(f.name, StructField(f.name, f.dataType, True))
+    fields = list(seen.values())
+    fields.append(StructField("MetricType", StringType(), False))
+    fields.append(StructField("SkipReason", StringType(), True))
+    fields.append(StructField("SkipCount", LongType(), True))
+    return StructType(fields)
+
+
+METRICS_UNION_SCHEMA = _metrics_union_schema()
+
+
+def _union_rows(requests) -> list[dict[str, Any]]:
+    """[(per_type rows, skipped counters)] -> METRICS_UNION_SCHEMA rows.
+    Only the tag is added: `pa.Table.from_pylist` reads the schema's
+    columns and fills the ones a row lacks (the other metric types') with
+    null."""
+    rows: list[dict[str, Any]] = []
+    for per_type, skipped in requests:
+        for mtype, trows in per_type.items():
+            rows.extend(r | {"MetricType": mtype} for r in trows)
+        rows.extend(
+            {"MetricType": _SKIP_TAG, "SkipReason": reason, "SkipCount": cnt}
+            for reason, cnt in skipped.items()
+            if cnt
+        )
+    return rows
 
 
 def _flatten_payload(content: bytes, fmt: str, signal: str) -> list[dict[str, Any]]:
-    """payload bytes -> flat rows. JSON/JSONL logs+traces take the fused
-    single-pass walker (otel/fast_flatten.py, ~3x the two-step lane); pb
-    logs+traces take the fused wire walker (otel/fast_wire.py, ~2.4x).
-    Both are differentially verified against the slow pairs
-    (test_fast_flatten.py / test_fast_wire.py); metrics take the same
-    walkers through _flatten_metrics_payload."""
+    """payload bytes -> flat rows (metrics: METRICS_UNION_SCHEMA rows).
+
+    gzip sniff (D2), then (signal, fmt) -> fused walker: pb takes the wire
+    walkers (otel/fast_wire.py, ~2.4x the two-step lane), JSON/JSONL the
+    single-pass JSON walkers (otel/fast_flatten.py, ~3x). Every (signal x
+    format) hot path is single-pass, each differentially verified against
+    its two-step authority (test_fast_flatten.py / test_fast_wire.py)."""
     if content[:2] == b"\x1f\x8b":  # gzip magic (D2)
         content = _gunzip(content)
+    if signal == "metrics":
+        if fmt == "pb":
+            return _union_rows([fast_wire.flatten_metrics_pb(content)])
+        if fmt == "json":
+            return _union_rows([fast_flatten.flatten_metrics_request_json(content)])
+        return _union_rows(fast_flatten.flatten_metrics_request_jsonl(content))
     if fmt == "pb":
         if signal == "logs":
             return fast_wire.flatten_logs_pb(content)
@@ -361,10 +419,11 @@ def _flatten_payload(content: bytes, fmt: str, signal: str) -> list[dict[str, An
     return fast_flatten.flatten_request_jsonl(content, signal)
 
 
-def _decode_simple(
+def _decode_kernel(
     signal: str,
-    table: str,
+    schema: StructType,
     on_error: str,
+    decode_counter=None,
     quarantine_dir: str | None = None,
     quarantine_counter=None,
 ):
@@ -378,7 +437,7 @@ def _decode_simple(
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    target = to_arrow_schema(schemas.raw_spark_schema(table))
+    target = to_arrow_schema(schema)
 
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
@@ -391,6 +450,8 @@ def _decode_simple(
             )
             fmts = batch.column("fmt")
             for i in range(batch.num_rows):
+                if decode_counter is not None:
+                    decode_counter.add(1)
                 # None until the bytes are in hand: a locality-lane read
                 # failure must quarantine WITHOUT a (misleading, empty)
                 # payload copy (ADVICE r6)
@@ -431,17 +492,50 @@ def finalize(raw_df: DataFrame, table: str) -> DataFrame:
     return raw_df.select(*cols)
 
 
+def decode(
+    payloads: DataFrame,
+    signal: str,
+    on_error: str = "raise",
+    decode_counter=None,
+    quarantine_dir: str | None = None,
+    quarantine_counter=None,
+) -> DataFrame:
+    """Accepted landing rows, batch or streaming -> the golden-typed table
+    (logs/traces) or the tagged union frame (metrics); `split_tables` maps
+    either to its output tables. `decode_counter` (an accumulator) counts
+    payload decodes; `quarantine_counter` counts payloads dropped via
+    quarantine/skip."""
+    if signal not in ("logs", "traces", "metrics"):
+        raise ValueError(f"unknown signal: {signal}")
+    table = f"otel_{signal}"
+    schema = METRICS_UNION_SCHEMA if signal == "metrics" else schemas.raw_spark_schema(table)
+    raw = payloads.mapInArrow(
+        _decode_kernel(
+            signal, schema, on_error, decode_counter, quarantine_dir, quarantine_counter
+        ),
+        schema,
+    )
+    return raw if signal == "metrics" else finalize(raw, table)
+
+
+def split_tables(decoded: DataFrame, signal: str) -> dict[str, DataFrame]:
+    """A `decode` frame -> {output table: frame}; metrics fan out to the 4
+    persisted tables (summary points are only counted, `skipped_metrics`)."""
+    if signal != "metrics":
+        return {f"otel_{signal}": decoded}
+    return {
+        schemas.METRIC_TABLES[t]: metrics_table(decoded, t)
+        for t in schemas.PERSISTED_METRIC_TYPES
+    }
+
+
 def decode_logs(
     payloads: DataFrame,
     on_error: str = "raise",
     quarantine_dir: str | None = None,
     quarantine_counter=None,
 ) -> DataFrame:
-    raw = payloads.mapInArrow(
-        _decode_simple("logs", "otel_logs", on_error, quarantine_dir, quarantine_counter),
-        schemas.raw_spark_schema("otel_logs"),
-    )
-    return finalize(raw, "otel_logs")
+    return decode(payloads, "logs", on_error, None, quarantine_dir, quarantine_counter)
 
 
 def decode_traces(
@@ -450,106 +544,7 @@ def decode_traces(
     quarantine_dir: str | None = None,
     quarantine_counter=None,
 ) -> DataFrame:
-    raw = payloads.mapInArrow(
-        _decode_simple("traces", "otel_traces", on_error, quarantine_dir, quarantine_counter),
-        schemas.raw_spark_schema("otel_traces"),
-    )
-    return finalize(raw, "otel_traces")
-
-
-# ---------------------------------------------------------------------------
-# Metrics decode: single pass -> union frame tagged by metric_type (D10)
-
-_SKIP_TAG = "skipped"
-
-
-def _metrics_union_schema() -> StructType:
-    """Common prefix + union of all type-specific columns + tag column.
-
-    One decode pass serves all 5 metric tables: each row carries its
-    `MetricType`; per-table frames are a filter+select away (never a second
-    decode). Skip accounting (D10/§1.3.12) rides the same frame as
-    `MetricType='skipped'` rows with the counter name in `SkipReason`.
-    """
-    seen: dict[str, StructField] = {}
-    for table in schemas.METRIC_TABLES.values():
-        for f in schemas.raw_spark_schema(table).fields:
-            seen.setdefault(f.name, StructField(f.name, f.dataType, True))
-    fields = list(seen.values())
-    fields.append(StructField("MetricType", StringType(), False))
-    fields.append(StructField("SkipReason", StringType(), True))
-    fields.append(StructField("SkipCount", LongType(), True))
-    return StructType(fields)
-
-
-METRICS_UNION_SCHEMA = _metrics_union_schema()
-
-
-def _flatten_metrics_payload(content: bytes, fmt: str):
-    """payload bytes -> [(per_type rows, skipped counters)]. pb takes the
-    fused wire walker (otel/fast_wire.py), JSON formats the fused JSON
-    walker (otel/fast_flatten.py) — completing the fused decode matrix:
-    every (signal x format) hot path is single-pass, each differentially
-    verified against its two-step authority."""
-    if content[:2] == b"\x1f\x8b":  # gzip magic (D2)
-        content = _gunzip(content)
-    if fmt == "pb":
-        return [fast_wire.flatten_metrics_pb(content)]
-    if fmt == "json":
-        return [fast_flatten.flatten_metrics_request_json(content)]
-    return fast_flatten.flatten_metrics_request_jsonl(content)
-
-
-def _decode_metrics_fn(
-    on_error: str,
-    decode_counter=None,
-    quarantine_dir: str | None = None,
-    quarantine_counter=None,
-):
-    union_cols = [f.name for f in METRICS_UNION_SCHEMA.fields]
-
-    def fn(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        target = to_arrow_schema(METRICS_UNION_SCHEMA)
-        for batch in batches:
-            rows: list[dict[str, Any]] = []
-            paths = batch.column("path")
-            contents = (
-                batch.column("content") if "content" in batch.schema.names else None
-            )
-            fmts = batch.column("fmt")
-            for i in range(batch.num_rows):
-                if decode_counter is not None:
-                    decode_counter.add(1)
-                content: bytes | None = None
-                try:
-                    content = (
-                        contents[i].as_py()
-                        if contents is not None
-                        else _read_payload_bytes(paths[i].as_py())
-                    )
-                    for per_type, skipped in _flatten_metrics_payload(content, fmts[i].as_py()):
-                        for mtype, trows in per_type.items():
-                            for r in trows:
-                                r = r | {"MetricType": mtype}
-                                # every union column present (None for the
-                                # other metric types' columns)
-                                rows.append({c: r.get(c) for c in union_cols})
-                        for reason, cnt in skipped.items():
-                            if cnt:
-                                r = {"MetricType": _SKIP_TAG, "SkipReason": reason, "SkipCount": cnt}
-                                rows.append({c: r.get(c) for c in union_cols})
-                except OtlpDecodeError as e:
-                    _handle_decode_error(
-                        e, on_error, quarantine_dir, paths[i].as_py(), content,
-                        quarantine_counter,
-                    )
-            if rows:
-                yield from pa.Table.from_pylist(rows, schema=target).to_batches()
-
-    return fn
+    return decode(payloads, "traces", on_error, None, quarantine_dir, quarantine_counter)
 
 
 def decode_metrics_union(
@@ -559,14 +554,9 @@ def decode_metrics_union(
     quarantine_dir: str | None = None,
     quarantine_counter=None,
 ) -> DataFrame:
-    """One decode pass over metrics payloads -> tagged union DataFrame.
-
-    `decode_counter` (a SparkContext accumulator) counts payload decodes —
-    used by tests to prove the fan-out runs exactly one decode job.
-    `quarantine_counter` counts payloads dropped via quarantine/skip."""
-    return payloads.mapInArrow(
-        _decode_metrics_fn(on_error, decode_counter, quarantine_dir, quarantine_counter),
-        METRICS_UNION_SCHEMA,
+    """One decode pass over metrics payloads -> tagged union DataFrame."""
+    return decode(
+        payloads, "metrics", on_error, decode_counter, quarantine_dir, quarantine_counter
     )
 
 
@@ -626,62 +616,36 @@ def ingest_directory(
     decode_counter=None,
     quarantine_dir: str | None = None,
     quarantine_counter=None,
-    lane: str = "auto",
-) -> dict[str, "DataFrame | str"]:
+) -> dict[str, DataFrame]:
     """End-to-end decode of a landing dir for one signal.
 
-    Returns {table_name: DataFrame} (metrics contribute 4 tables + a
-    '_skipped' accounting frame). The metrics union frame is persisted so
-    the 5-way fan-out (4 table writes + skip accounting) runs ONE decode
-    job, mirroring streaming/ingest.py's micro-batch persist; it is exposed
-    as '_union' so callers can unpersist after their actions complete.
-    '_lane' records which landing reader ran.
-
-    `lane`: 'auto' (default — payload-locality for local/posix sources,
-    content/binaryFile for object stores; see read_landing_auto), or force
-    'locality' / 'content'.
+    Returns {table_name: DataFrame} plus '_rejected' (files refused by the
+    landing rule, with their reason). The landing reader is
+    read_landing_auto's: payload-locality for local/posix sources,
+    content/binaryFile for object stores. Metrics contribute 4 tables + a
+    '_skipped' accounting frame; their union frame is persisted so the
+    5-way fan-out (4 table writes + skip accounting) runs ONE decode job,
+    mirroring streaming/ingest.py's micro-batch persist, and is exposed as
+    '_union' so callers can unpersist after their actions complete.
 
     Passing `quarantine_dir` switches on_error to 'quarantine': invalid
     payloads + typed-reason sidecars land in the bad-input dir while the
     pipeline continues (D25)."""
     if quarantine_dir:
         on_error = "quarantine"
-    if lane not in ("auto", "locality", "content"):
-        raise ValueError(f"unknown lane: {lane}")
-    if lane == "auto":
-        lane = (
-            "locality"
-            if is_local_or_posix(landing_dir, _default_fs_is_local(spark))
-            else "content"
-        )
-    reader = read_landing_meta if lane == "locality" else read_landing
-    payloads, rejected = reader(spark, landing_dir, max_payload_bytes=max_payload_bytes)
-    if signal == "logs":
-        return {
-            "otel_logs": decode_logs(payloads, on_error, quarantine_dir, quarantine_counter),
-            "_rejected": rejected,
-            "_lane": lane,
-        }
-    if signal == "traces":
-        return {
-            "otel_traces": decode_traces(payloads, on_error, quarantine_dir, quarantine_counter),
-            "_rejected": rejected,
-            "_lane": lane,
-        }
-    if signal == "metrics":
-        from pyspark import StorageLevel
+    payloads, rejected = read_landing_auto(
+        spark, landing_dir, max_payload_bytes=max_payload_bytes
+    )
+    decoded = decode(
+        payloads, signal, on_error, decode_counter, quarantine_dir, quarantine_counter
+    )
+    if signal != "metrics":
+        return split_tables(decoded, signal) | {"_rejected": rejected}
+    from pyspark import StorageLevel
 
-        union_df = decode_metrics_union(
-            payloads, on_error, decode_counter, quarantine_dir, quarantine_counter
-        )
-        union_df = union_df.persist(StorageLevel.MEMORY_AND_DISK)
-        out: dict[str, DataFrame] = {
-            schemas.METRIC_TABLES[t]: metrics_table(union_df, t)
-            for t in schemas.PERSISTED_METRIC_TYPES
-        }
-        out["_skipped"] = skipped_metrics(union_df)
-        out["_rejected"] = rejected
-        out["_union"] = union_df
-        out["_lane"] = lane
-        return out
-    raise ValueError(f"unknown signal: {signal}")
+    union_df = decoded.persist(StorageLevel.MEMORY_AND_DISK)
+    return split_tables(union_df, signal) | {
+        "_skipped": skipped_metrics(union_df),
+        "_rejected": rejected,
+        "_union": union_df,
+    }

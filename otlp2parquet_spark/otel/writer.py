@@ -29,7 +29,7 @@ from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -243,13 +243,18 @@ def write_native(
     *,
     max_rows_per_file: int = DEFAULT_MAX_ROWS_PER_FILE,
     mode: str = "append",
-) -> str:
+) -> int:
     """Native-mode write: Hive partitioning on (service, year, month, day,
     hour) — Catalyst partition pruning covers both the time predicates (Q11)
     and service narrowing (SURVEY §4 rows 1-2). `maxRecordsPerFile` enforces
     the reference's 200k-row file-size policy (D17) without a custom batcher.
+
+    Returns the rows this call wrote, counted by an observe() probe in the
+    write job itself (reading the table back would also count earlier
+    appends).
     """
     path = os.path.join(root, schemas.TABLE_PATH_SEGMENT[table])
+    obs = Observation()
     (
         df.withColumn("service", sanitize_service_col(F.col("ServiceName")))
         .withColumn("year", F.year("Timestamp"))
@@ -259,6 +264,9 @@ def write_native(
         # cluster rows so each output file covers one contiguous time range
         # per service (reference batch clustering, SURVEY §4 row 6)
         .repartition("service", "year", "month", "day", "hour")
+        # above the shuffle: when the shuffle turns out empty, adaptive
+        # execution replaces the stage below it and a probe there is lost
+        .observe(obs, F.count(F.lit(1)).alias("rows"))
         .sortWithinPartitions("Timestamp")
         .write.mode(mode)
         .option("compression", "snappy")
@@ -266,7 +274,29 @@ def write_native(
         .partitionBy("service", "year", "month", "day", "hour")
         .parquet(path)
     )
-    return path
+    return obs.get["rows"]
+
+
+def write_table(
+    df: DataFrame,
+    table: str,
+    root: str,
+    *,
+    layout: str = "parity",
+    bucket: str = "hour",
+    max_rows_per_file: int = DEFAULT_MAX_ROWS_PER_FILE,
+    run_tag: str | None = None,
+) -> int:
+    """The layout -> writer dispatch for batch and streaming ingest: write
+    one table in `layout` ("parity" or "native"; `bucket` and `run_tag` are
+    parity-only) and return the rows THIS call wrote."""
+    if layout == "parity":
+        acct = write_partitioned(
+            df, table, root, bucket=bucket, max_rows_per_file=max_rows_per_file,
+            run_tag=run_tag,
+        )
+        return sum(r.rows for r in acct.collect())
+    return write_native(df, table, root, max_rows_per_file=max_rows_per_file)
 
 
 def read_table(spark, root: str, table: str, *, layout: str = "parity") -> DataFrame:

@@ -11,6 +11,9 @@ binary-vs-hex TraceId bridge the reference glosses over (SURVEY §7 hard-part
 
 from __future__ import annotations
 
+from functools import reduce
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -19,16 +22,28 @@ from otlp2parquet_spark.otel import schemas, writer
 OTEL_TABLES = tuple(schemas.TABLE_COLUMNS)
 
 
+def _present_tables(
+    spark: SparkSession, root: str, layout: str, tables=None
+) -> dict[str, DataFrame]:
+    """{table: frame} per table under `root`. Only an absent table dir
+    (e.g. summary) is skipped; any other read error raises."""
+    out = {}
+    for table in tables or OTEL_TABLES:
+        try:
+            out[table] = writer.read_table(spark, root, table, layout=layout)
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+    return out
+
+
 def register_otel_views(
     spark: SparkSession, root: str, *, layout: str = "parity", tables=None
 ) -> None:
     """`otel_logs` / `otel_traces` / `otel_metrics_*` temp views over a
     written layout (reference docs/querying.md preamble)."""
-    for table in tables or OTEL_TABLES:
-        try:
-            writer.read_table(spark, root, table, layout=layout).createOrReplaceTempView(table)
-        except Exception:
-            pass  # table not present in this layout (e.g. summary)
+    for table, df in _present_tables(spark, root, layout, tables).items():
+        df.createOrReplaceTempView(table)
 
 
 def recent_logs(spark: SparkSession, limit: int = 10) -> DataFrame:
@@ -242,15 +257,12 @@ def logs_with_traces(spark: SparkSession) -> DataFrame:
 
 
 def table_counts(spark: SparkSession, root: str, *, layout: str = "parity") -> DataFrame:
-    """Q10 (reference tests/harness/mod.rs:207-249): per-table row counts."""
-    dfs = []
-    for table in OTEL_TABLES:
-        try:
-            df = writer.read_table(spark, root, table, layout=layout)
-        except Exception:
-            continue
-        dfs.append(df.agg(F.count("*").alias("n")).select(F.lit(table).alias("table_name"), "n"))
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionAll(d)
-    return out.orderBy("table_name")
+    """Q10 (reference tests/harness/mod.rs:207-249): per-table row counts;
+    an empty (table_name, n) frame when no table is written yet."""
+    dfs = [
+        df.agg(F.count("*").alias("n")).select(F.lit(table).alias("table_name"), "n")
+        for table, df in _present_tables(spark, root, layout).items()
+    ]
+    if not dfs:
+        return spark.createDataFrame([], "table_name string, n bigint")
+    return reduce(DataFrame.unionAll, dfs).orderBy("table_name")

@@ -14,10 +14,14 @@ src/lib.rs:244-305) onto Spark Structured Streaming (SURVEY.md §7 M5):
 | periodic expiry flush task D19              | trigger(processingTime=...)    |
 | shutdown drain + graceful exit D20          | checkpoint + query.stop():     |
 |                                             | restart resumes exactly-once   |
-| per-request accounting D27                  | df.observe() + progress events |
+| per-request accounting D27                  | observe() metrics in progress  |
+|                                             | events: landing.rejected,      |
+|                                             | ingest.records                 |
 
-The micro-batch sink is the SAME parity/native writer the batch path uses
-(T7 foreachBatch), so layout and footer metadata are identical in both modes.
+Landing acceptance, decode, the table split and the layout -> writer
+dispatch are the batch path's own (`ingest.split_landing`, `ingest.decode`,
+`ingest.split_tables`, `writer.write_table`; T7 foreachBatch), so rows,
+layout and footer metadata are identical in both modes.
 """
 
 from __future__ import annotations
@@ -33,7 +37,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from otlp2parquet_spark.otel import ingest, schemas, writer
+from otlp2parquet_spark.otel import ingest, writer
 
 BINARYFILE_SCHEMA = StructType(
     [
@@ -65,20 +69,12 @@ def read_landing_stream(
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.load(landing_dir)
-    return (
-        df.select(
-            "path",
-            "content",
-            # same codegen regexp twin as the batch lane (otel/ingest.py):
-            # property-tested equal to the Python payload_format over
-            # adversarial paths, and keeps the package F.udf-free
-            ingest.payload_format_col(F.col("path")).alias("fmt"),
-        )
-        # size guard (D4) + format dispatch (D3); rejected payloads are
-        # dropped here — quarantine accounting is an observe() metric
-        .filter((F.length("content") <= F.lit(max_payload_bytes)) & F.col("fmt").isNotNull())
+    # D3/D4 acceptance: refused files are counted by the `landing`
+    # observation (its `rejected` metric), one value per progress event
+    accepted, _ = ingest.split_landing(
+        reader.load(landing_dir), max_payload_bytes, observe="landing"
     )
+    return accepted
 
 
 def stream_ingest(
@@ -107,52 +103,35 @@ def stream_ingest(
     payloads = read_landing_stream(
         spark, landing_dir, max_files_per_trigger=max_files_per_trigger
     )
-
     # a poison payload must not kill the long-running query: with a
     # quarantine dir the bad input lands there (D25), otherwise fail loudly
     on_error = "quarantine" if quarantine_dir else "raise"
-    if signal == "logs":
-        decoded = ingest.decode_logs(payloads, on_error, quarantine_dir)
-        tables = {"otel_logs": decoded}
-    elif signal == "traces":
-        decoded = ingest.decode_traces(payloads, on_error, quarantine_dir)
-        tables = {"otel_traces": decoded}
-    elif signal == "metrics":
-        union_df = ingest.decode_metrics_union(payloads, on_error, quarantine_dir=quarantine_dir)
-        tables = None  # split inside foreachBatch (one decode pass per batch)
-        decoded = union_df
-    else:
-        raise ValueError(f"unknown signal: {signal}")
+    decoded = ingest.decode(payloads, signal, on_error, quarantine_dir=quarantine_dir)
 
     def flush(batch_df: DataFrame, epoch_id: int) -> None:  # T7
+        # the metrics union fans out to 4 tables: persist so each micro-batch
+        # decodes once; summary rows are counted-and-dropped
         if signal == "metrics":
-            # persist the 4 server tables; summary rows counted-and-dropped
             batch_df = batch_df.persist()
-            try:
-                for mtype in schemas.PERSISTED_METRIC_TYPES:
-                    tdf = ingest.metrics_table(batch_df, mtype)
-                    _write(tdf, schemas.METRIC_TABLES[mtype], epoch_id)
-            finally:
+        try:
+            for table, df in ingest.split_tables(batch_df, signal).items():
+                # parity: bucket="minute" gives one file per (service,
+                # minute) — D16 BatchKey — and run_tag=epoch makes file
+                # names deterministic, so a replayed micro-batch (crash
+                # between write and checkpoint commit) overwrites its own
+                # files: exactly-once at the file level
+                writer.write_table(
+                    df,
+                    table,
+                    output_root,
+                    layout=layout,
+                    bucket="minute",
+                    max_rows_per_file=max_rows_per_file,
+                    run_tag=f"epoch{epoch_id}",
+                )
+        finally:
+            if batch_df.is_cached:
                 batch_df.unpersist()
-        else:
-            _write(batch_df, next(iter(tables)), epoch_id)
-
-    def _write(df: DataFrame, table: str, epoch_id: int) -> None:
-        if layout == "parity":
-            # bucket="minute": one file per (service, minute) — D16 BatchKey.
-            # run_tag=epoch makes file names deterministic, so a replayed
-            # micro-batch (crash between write and checkpoint commit)
-            # overwrites its own files: exactly-once at the file level.
-            writer.write_partitioned(
-                df,
-                table,
-                output_root,
-                bucket="minute",
-                max_rows_per_file=max_rows_per_file,
-                run_tag=f"epoch{epoch_id}",
-            ).collect()
-        else:
-            writer.write_native(df, table, output_root, max_rows_per_file=max_rows_per_file)
 
     ws = (
         decoded.observe("ingest", F.count(F.lit(1)).alias("records"))  # D26/D27

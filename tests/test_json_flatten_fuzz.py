@@ -2,7 +2,7 @@
 tests/test_media_parser_fuzz.py): over arbitrary bytes, arbitrary JSON
 trees, and structured mutations of valid requests, every production decode
 entry point must either return rows or raise OtlpDecodeError — any other
-exception class escapes ingest._decode_simple's `except OtlpDecodeError`
+exception class escapes ingest._decode_kernel's `except OtlpDecodeError`
 clause and kills the whole Spark task instead of quarantining one payload
 (the D25 posture; reference testdata/invalid/README.md: "invalid data is
 properly rejected, no silent failures").
@@ -12,7 +12,7 @@ This is the generative closure of round 6's fixed bad-shape lists
 motivated _decode_guard was one instance of a class; hypothesis searches
 the class. Driver-side only — no Spark session needed, hundreds of
 examples run in seconds against the same functions the mapInArrow kernels
-call (ingest._flatten_payload / ingest._flatten_metrics_payload).
+call (ingest._flatten_payload, the one walker dispatch for every signal).
 """
 
 from __future__ import annotations
@@ -293,28 +293,23 @@ def test_mutated_valid_metrics(path_idx, junk):
 
 
 # ---------------------------------------------------------------------------
-# The kernel boundary itself: arbitrary BYTES through the exact functions
-# ingest._decode_simple / _decode_metrics_fn call — covers the gzip sniff,
-# the utf-8 decode, json.loads, the pb wire walkers, and the JSONL split
-# in one property (everything between "payload bytes" and "rows")
+# The kernel boundary itself: arbitrary BYTES through the exact function
+# ingest._decode_kernel calls — covers the gzip sniff, the utf-8 decode,
+# json.loads, the pb wire walkers, the JSONL split and the metrics union
+# shaping in one property (everything between "payload bytes" and "rows")
 
 _FMT = st.sampled_from(["pb", "json", "jsonl"])
+_KERNEL_SIGNALS = st.sampled_from(["logs", "traces", "metrics"])
 
 
 @settings(max_examples=400, deadline=None)
-@given(st.binary(max_size=200), _FMT, _SIGNALS)
+@given(st.binary(max_size=200), _FMT, _KERNEL_SIGNALS)
 def test_arbitrary_bytes_flatten_payload(content, fmt, signal):
     _contract(ingest._flatten_payload, content, fmt, signal)
 
 
-@settings(max_examples=300, deadline=None)
-@given(st.binary(max_size=200), _FMT)
-def test_arbitrary_bytes_metrics_payload(content, fmt):
-    _contract(ingest._flatten_metrics_payload, content, fmt)
-
-
 @settings(max_examples=200, deadline=None)
-@given(st.binary(max_size=120), _FMT, _SIGNALS)
+@given(st.binary(max_size=120), _FMT, _KERNEL_SIGNALS)
 def test_gzipped_arbitrary_bytes(content, fmt, signal):
     # valid gzip wrapping junk: the sniff+gunzip path succeeds, the decode
     # beneath must still hold the contract

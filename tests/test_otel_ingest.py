@@ -528,14 +528,7 @@ def test_auto_lane_routes_by_source_and_matches_content_lane(spark, landing):
     assert a == b and a
 
     out = ingest.ingest_directory(spark, logs_dir, "logs")
-    assert out["_lane"] == "locality"
-    forced = ingest.ingest_directory(spark, logs_dir, "logs", lane="content")
-    assert forced["_lane"] == "content"
-    assert sorted(map(tuple, out["otel_logs"].collect()), key=repr) == sorted(
-        map(tuple, forced["otel_logs"].collect()), key=repr
-    )
-    with pytest.raises(ValueError, match="unknown lane"):
-        ingest.ingest_directory(spark, logs_dir, "logs", lane="warp")
+    assert sorted(map(tuple, out["otel_logs"].collect()), key=repr) == b
 
 
 def test_locality_lane_quarantine_parity(spark, landing, tmp_path):
