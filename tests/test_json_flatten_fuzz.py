@@ -308,6 +308,12 @@ def test_arbitrary_bytes_flatten_payload(content, fmt, signal):
     _contract(ingest._flatten_payload, content, fmt, signal)
 
 
+@settings(max_examples=300, deadline=None)
+@given(st.binary(max_size=200), _FMT)
+def test_arbitrary_bytes_metrics_payload(content, fmt):
+    _contract(ingest._flatten_payload, content, fmt, "metrics")
+
+
 @settings(max_examples=200, deadline=None)
 @given(st.binary(max_size=120), _FMT, _KERNEL_SIGNALS)
 def test_gzipped_arbitrary_bytes(content, fmt, signal):
